@@ -201,8 +201,8 @@ from stock_market_data_pipeline_v2_spark.operators.dedup import (
 SF0001 = "/root/testdata/sf0.001"
 
 
-# (r12 optimization) per-session PLAN memos for the two most shared
-# derived frames — the load_table memo's argument one level up:
+# Per-session PLAN memos for the most shared derived frames — the
+# load_table memo's argument one level up:
 # building the bar/tick cleaning chains costs a measured ~0.2-0.35 s
 # of py4j plan construction per call and _clean_bars alone has 24
 # call sites (×2 bench runs each). The memoized value is the LAZY
@@ -210,58 +210,66 @@ SF0001 = "/root/testdata/sf0.001"
 _PLAN_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
-def _clean_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_runtime(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, "clean_bars")
+def _memo(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
+    """The memoized plan ``name`` for this application and ``sf_dir``,
+    built by ``build()`` on the first call. Every call returns a fresh
+    ``select("*")`` over it, never the memo's own DataFrame: an action
+    on a shared DataFrame executes its QueryExecution, after which the
+    next caller's extended explain also prints AQE's
+    ``== Initial Plan ==`` (every exchange counted twice). The wrapper
+    costs 9-17 ms per hit against seconds of plan build."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
     df = _PLAN_MEMO.get(key)
     if df is None:
-        df = filter_clean_bars(
-            bars_from_events(load_table(spark, sf_dir, "events"))
-        )
-        _PLAN_MEMO[key] = df
-    return df
+        df = _PLAN_MEMO[key] = build()
+    return df.select("*")
+
+
+def _clean_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
+    configure_runtime(spark)
+    return _memo(
+        spark,
+        sf_dir,
+        "clean_bars",
+        lambda: filter_clean_bars(bars_from_events(load_table(spark, sf_dir, "events"))),
+    )
 
 
 def _returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # (r13 optimization) third shared-frame PLAN memo: the daily-
-    # returns chain is rebuilt by 13 registered queries (returns/
-    # moments/outliers/beta/sharpe/ranks/correlations/similarity/
-    # pattern families) at a measured ~0.2 s of eager re-analysis per
-    # call. Lazy plan only — every action still scans parquet.
-    key = (spark.sparkContext.applicationId, sf_dir, "daily_returns")
-    df = _PLAN_MEMO.get(key)
-    if df is None:
-        df = daily_returns(_clean_bars(spark, sf_dir))
-        _PLAN_MEMO[key] = df
-    return df
+    # The daily-returns chain is rebuilt by 13 registered queries
+    # (returns/moments/outliers/beta/sharpe/ranks/correlations/
+    # similarity/pattern families) at a measured ~0.2 s of eager
+    # re-analysis per call.
+    return _memo(
+        spark, sf_dir, "daily_returns", lambda: daily_returns(_clean_bars(spark, sf_dir))
+    )
 
 
 def _rolling_ind(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # (r13 optimization) shared-frame PLAN memo for the indicator
-    # chain — consumed by q_rolling_indicators AND the performance
-    # mart below (~0.55 s of eager plan analysis per rebuild).
-    key = (spark.sparkContext.applicationId, sf_dir, "rolling_indicators")
-    df = _PLAN_MEMO.get(key)
-    if df is None:
-        df = rolling_indicators(_returns(spark, sf_dir))
-        _PLAN_MEMO[key] = df
-    return df
+    # The indicator chain — consumed by q_rolling_indicators AND the
+    # performance mart below (~0.55 s of eager plan analysis per
+    # rebuild).
+    return _memo(
+        spark,
+        sf_dir,
+        "rolling_indicators",
+        lambda: rolling_indicators(_returns(spark, sf_dir)),
+    )
 
 
 def _perf_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # (r13 optimization) shared-frame PLAN memo for the full stock-
-    # performance mart (returns -> rolling indicators -> signal
-    # projection, ~0.7 s of plan build), feeding q_stock_performance
-    # and q_daily_summary; the enriched frame rides the memo above.
-    key = (spark.sparkContext.applicationId, sf_dir, "stock_performance")
-    df = _PLAN_MEMO.get(key)
-    if df is None:
-        df = stock_performance(
-            _clean_bars(spark, sf_dir),
-            enriched=_rolling_ind(spark, sf_dir),
-        )
-        _PLAN_MEMO[key] = df
-    return df
+    # The full stock-performance mart (returns -> rolling indicators
+    # -> signal projection, ~0.7 s of plan build), feeding
+    # q_stock_performance and q_daily_summary; the enriched frame
+    # rides the memo above.
+    return _memo(
+        spark,
+        sf_dir,
+        "stock_performance",
+        lambda: stock_performance(
+            _clean_bars(spark, sf_dir), enriched=_rolling_ind(spark, sf_dir)
+        ),
+    )
 
 
 def q_daily_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2743,12 +2751,9 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure_runtime(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, "ticks")
-    df = _PLAN_MEMO.get(key)
-    if df is None:
-        df = tick_events(load_table(spark, sf_dir, "events"))
-        _PLAN_MEMO[key] = df
-    return df
+    return _memo(
+        spark, sf_dir, "ticks", lambda: tick_events(load_table(spark, sf_dir, "events"))
+    )
 
 
 def q_multi_grain_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2792,101 +2797,80 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # ORDER IS EVIDENCE (CLAUDE.md): the driver samples the FIRST 50
-# entries. Round-12 window (documented rule: no red/unsampled
-# CORRECTNESS_r11 rows exist) = the two new r12 queries (txn_delete,
-# txn_schema_evolution), then the four txn queries RE-SAMPLED
-# because their implementation changed this round (txn_table.py
-# write paths now stage the parent manifest's stat-col union;
-# q_txn_pruned_read's hard assert became a soft report — precedent:
-# txn_merge_upsert in r11), then the FIFTEEN optimization-phase
-# re-samples: the five BLAS-tier swaps (dedup_embedding,
-# ann_cosine_topk, hard_negative_mining, ann_sq8_topk,
-# ann_recall_report) and the ten rows whose implementations the
-# optimization phase restructured (part_triangles,
-# lineitem_profile_drift, dedup_simhash, dedup_minhash_lsh,
-# dedup_incremental_lsh, minhash_estimate_audit, dedup_incremental,
-# quality_classifier, classifier_calibration, quality_decile_bins —
-# all oracle-proven bit-identical at both SFs; the window makes the
-# driver's own sample say so too; source_quality_profile and
-# classifier_auc_report also changed but were ALREADY inside the
-# stale window below), then the 29 stalest previously-sampled
-# entries straight off the head of the r11 tail (walk_forward_splits
-# ... rolling_beta). The two by-design rows-only entries
-# (windowed_analytics_reagg, image_features) sit at slots 51/52,
-# behind the sample per the registry invariant; then the displaced
-# previously-sampled rows in staleness order (cross_sectional_ranks
-# ... monthly_revenue_growth — the freshest of the old stale block,
-# pushed out by the ten extra re-samples), then the remaining
-# unsampled tail (dedup_embedding_ivf, ann_ivf_topk ...
-# lm_perplexity_cross), with r11's sampled non-txn entries (minus
-# this round's re-samples; ... top_volume_days, freshest) at the
-# very end — r13's window reads from cross_sectional_ranks onward
-# unless reds appear or implementations change. Future rotations
-# edit THIS list only — the funcs dict below is order-insignificant.
+# entries. The head holds the 23 queries whose window plans changed
+# when every window aggregate became a single projected column
+# (PERF.md lesson 10; bit-identical by oracle at both SFs): the mart
+# chain first, then the returns family and the other operators. The
+# rest keeps the previous order: the txn and optimization re-samples,
+# the stale previously-sampled block, the two by-design rows-only
+# entries (windowed_analytics_reagg, image_features) — behind slot 50
+# per the registry invariant — then the unsampled tail and the
+# freshest sampled entries at the very end. Future rotations edit
+# THIS list only — the funcs dict below is order-insignificant.
 _QUERY_ORDER = [
-    "txn_delete", "txn_schema_evolution", "txn_merge_upsert",
-    "txn_time_travel", "txn_pruned_read", "txn_stream_sink",
-    "dedup_embedding", "ann_cosine_topk", "hard_negative_mining",
-    "ann_sq8_topk", "ann_recall_report", "part_triangles",
-    "lineitem_profile_drift", "dedup_simhash", "dedup_minhash_lsh",
-    "dedup_incremental_lsh", "minhash_estimate_audit", "dedup_incremental",
-    "quality_classifier", "classifier_calibration", "quality_decile_bins",
-    "walk_forward_splits", "market_beta", "event_value_quantiles",
-    "return_correlations", "bollinger_bands", "stochastic_k",
-    "hll_user_overlap", "embedding_top_component", "lineitem_profile_drift_sketch",
-    "source_quality_profile", "weighted_price_median", "classifier_auc_report",
-    "copurchase_rules", "lang_id_confusion", "histogram_daily_rollup",
-    "part_components", "ivf_cluster_profile", "shipping_priority_topk",
-    "returnflag_priority_counts", "dominant_part_suppliers", "cms_daily_rollup",
-    "pq_subspace_profile", "ann_index_extend", "pq_index_extend",
-    "bloom_daily_rollup", "macd", "atr_obv",
-    "drawdown", "rolling_beta", "windowed_analytics_reagg",
-    "image_features", "cross_sectional_ranks", "pmi_collocations",
+    "stock_performance", "daily_summary", "rolling_indicators",
+    "daily_returns", "bollinger_bands", "realtime_signals",
+    "market_beta", "return_correlations", "stochastic_k",
+    "atr_obv", "drawdown", "rolling_beta",
+    "cross_sectional_ranks", "sharpe_ratios", "monthly_revenue_growth",
+    "benford_audit", "similar_symbols", "pattern_match",
+    "funnel_conversion", "scd2_user_status", "sft_render_spans",
+    "return_moments", "return_outliers", "txn_delete",
+    "txn_schema_evolution", "txn_merge_upsert", "txn_time_travel",
+    "txn_pruned_read", "txn_stream_sink", "dedup_embedding",
+    "ann_cosine_topk", "hard_negative_mining", "ann_sq8_topk",
+    "ann_recall_report", "part_triangles", "lineitem_profile_drift",
+    "dedup_simhash", "dedup_minhash_lsh", "dedup_incremental_lsh",
+    "minhash_estimate_audit", "dedup_incremental", "quality_classifier",
+    "classifier_calibration", "quality_decile_bins", "walk_forward_splits",
+    "event_value_quantiles", "hll_user_overlap", "embedding_top_component",
+    "lineitem_profile_drift_sketch", "source_quality_profile", "weighted_price_median",
+    "classifier_auc_report", "copurchase_rules", "lang_id_confusion",
+    "histogram_daily_rollup", "part_components", "ivf_cluster_profile",
+    "shipping_priority_topk", "returnflag_priority_counts", "dominant_part_suppliers",
+    "cms_daily_rollup", "pq_subspace_profile", "ann_index_extend",
+    "pq_index_extend", "bloom_daily_rollup", "macd",
+    "windowed_analytics_reagg", "image_features", "pmi_collocations",
     "balance_rich_dormant", "min_cost_supplier", "nation_revenue_share",
     "bilateral_trade", "disjunctive_brand_revenue", "top_return_customers",
-    "sharpe_ratios", "monthly_revenue_growth", "dedup_embedding_ivf",
-    "ann_ivf_topk", "ann_pq_topk", "ann_ivfpq_topk",
-    "ann_lsh_topk", "prototypicality_prune", "audio_features",
-    "multimodal_decode", "multimodal_frames", "multimodal_resize",
-    "banded_discount_revenue", "nation_market_share", "supplier_nation_profit",
-    "customer_order_distribution", "top_supplier_revenue", "range_frame_revenue",
-    "join_skew_profile", "degree_distribution", "link_prediction",
-    "hard_negative_ivf", "salted_join_revenue", "salted_event_stats",
-    "market_concentration", "data_quality_report", "referential_integrity_audit",
-    "part_skyline", "label_centroid_similarity", "label_loo_outliers",
-    "knn_label_eval", "event_metrics_unpivot", "orders_cube",
-    "tick_gap_report", "part_abc_analysis", "rake_keywords",
-    "benford_audit", "part_supplier_counts", "repeated_spans_rolling",
+    "dedup_embedding_ivf", "ann_ivf_topk", "ann_pq_topk",
+    "ann_ivfpq_topk", "ann_lsh_topk", "prototypicality_prune",
+    "audio_features", "multimodal_decode", "multimodal_frames",
+    "multimodal_resize", "banded_discount_revenue", "nation_market_share",
+    "supplier_nation_profit", "customer_order_distribution", "top_supplier_revenue",
+    "range_frame_revenue", "join_skew_profile", "degree_distribution",
+    "link_prediction", "hard_negative_ivf", "salted_join_revenue",
+    "salted_event_stats", "market_concentration", "data_quality_report",
+    "referential_integrity_audit", "part_skyline", "label_centroid_similarity",
+    "label_loo_outliers", "knn_label_eval", "event_metrics_unpivot",
+    "orders_cube", "tick_gap_report", "part_abc_analysis",
+    "rake_keywords", "part_supplier_counts", "repeated_spans_rolling",
     "ann_filtered_topk", "ngram_decontaminate", "temperature_mix",
-    "hilbert_events", "similar_symbols", "pattern_match",
-    "cohort_retention", "funnel_conversion", "daily_vwap",
+    "hilbert_events", "cohort_retention", "daily_vwap",
     "multi_grain_bars", "forward_fill_bars", "order_priority_rollup",
     "promo_revenue_monthly", "small_qty_part_revenue", "large_volume_customers",
     "returned_orders_by_priority", "dormant_customers", "exclusive_fault_suppliers",
     "event_type_pivot", "text_quality", "lang_id",
-    "daily_bars", "daily_summary", "knn_label_eval_ivf",
-    "stateful_features", "pipeline_lineage", "regional_customer_summary",
-    "pricing_summary", "top_revenue_orders", "merge_upsert",
-    "snapshot_diff", "scd2_user_status", "regional_supplier_revenue",
-    "windowed_analytics_range_join", "daily_returns", "rolling_indicators",
-    "stock_performance", "window_agg_15m", "windowed_analytics",
-    "realtime_signals", "doc_fingerprint", "lm_perplexity",
+    "daily_bars", "knn_label_eval_ivf", "stateful_features",
+    "pipeline_lineage", "regional_customer_summary", "pricing_summary",
+    "top_revenue_orders", "merge_upsert", "snapshot_diff",
+    "regional_supplier_revenue", "windowed_analytics_range_join", "window_agg_15m",
+    "windowed_analytics", "doc_fingerprint", "lm_perplexity",
     "boilerplate_prefixes", "winsorize_ticks", "pii_scrub",
     "strip_html", "split_sentences", "gopher_filter",
     "repetition_filter", "mix_corpus", "chunk_documents",
     "token_frequency", "stratified_sample", "shuffle_corpus",
     "source_drift_kl", "length_bucket_batches", "bpe_token_counts",
-    "sft_render_spans", "hash_embeddings", "zorder_events",
-    "ngram_containment", "leakage_safe_split", "importance_weights",
-    "importance_resample", "pack_sequences", "curation_pipeline",
-    "corpus_stats_by_source", "dedup_exact", "repeated_spans",
-    "dedup_sentences", "lm_perplexity_cross", "dedup_keep_best",
-    "hll_event_users", "dedup_sorted_neighborhood", "embedding_diversity",
-    "part_name_fuzzy_pairs", "profile_lineitem", "order_value_distribution",
-    "type_token_stats", "bloom_decontaminate", "event_value_quantile_sketch",
-    "event_transitions", "part_pagerank", "dedup_prefix_filter",
-    "hll_daily_rollup", "cms_token_frequency", "return_moments",
-    "return_outliers", "sector_activity_sketch", "profile_lineitem_sketch",
+    "hash_embeddings", "zorder_events", "ngram_containment",
+    "leakage_safe_split", "importance_weights", "importance_resample",
+    "pack_sequences", "curation_pipeline", "corpus_stats_by_source",
+    "dedup_exact", "repeated_spans", "dedup_sentences",
+    "lm_perplexity_cross", "dedup_keep_best", "hll_event_users",
+    "dedup_sorted_neighborhood", "embedding_diversity", "part_name_fuzzy_pairs",
+    "profile_lineitem", "order_value_distribution", "type_token_stats",
+    "bloom_decontaminate", "event_value_quantile_sketch", "event_transitions",
+    "part_pagerank", "dedup_prefix_filter", "hll_daily_rollup",
+    "cms_token_frequency", "sector_activity_sketch", "profile_lineitem_sketch",
     "part_kcore", "winnow_fingerprints", "passage_overlap",
     "passage_clusters", "dedup_ngram_jaccard", "dedup_clusters",
     "dedup_clusters_star", "dedup_embedding_blas", "ann_cosine_topk_blas",

@@ -1173,17 +1173,13 @@ def sft_render_spans(
     w_prior = w.rowsBetween(Window.unboundedPreceding, -1)
     return (
         turns.withColumn("__rlen", rendered_len.cast("long"))
+        .withColumn("__prior", F.sum("__rlen").over(w_prior))
         .select(
             "doc_id",
             "turn_idx",
             "role",
-            F.coalesce(F.sum("__rlen").over(w_prior), F.lit(0))
-            .cast("long")
-            .alias("span_start"),
-            (
-                F.coalesce(F.sum("__rlen").over(w_prior), F.lit(0))
-                + F.col("__rlen")
-            )
+            F.coalesce(F.col("__prior"), F.lit(0)).cast("long").alias("span_start"),
+            (F.coalesce(F.col("__prior"), F.lit(0)) + F.col("__rlen"))
             .cast("long")
             .alias("span_end"),
             (F.col("role") == "assistant").alias("trainable"),

@@ -146,23 +146,6 @@ ORDER BY hh.sector
 """
 
 
-def customer_geography(customer: DataFrame, nation: DataFrame, region: DataFrame) -> DataFrame:
-    """customer ⋈ nation ⋈ region (broadcast chain)."""
-    n = nation.select(
-        F.col("n_nationkey").alias("nationkey"),
-        F.col("n_name").alias("nation_name"),
-        F.col("n_regionkey").alias("regionkey"),
-    )
-    r = region.select(
-        F.col("r_regionkey").alias("regionkey"), F.col("r_name").alias("region_name")
-    )
-    fact = customer.withColumn("nationkey", F.col("c_nationkey"))
-    out = broadcast_dim_join(fact, n, keys=["nationkey"], how="inner")
-    return broadcast_dim_join(out, r, keys=["regionkey"], how="inner").drop(
-        "nationkey", "regionkey"
-    )
-
-
 def regional_customer_summary(
     customer: DataFrame, nation: DataFrame, region: DataFrame
 ) -> DataFrame:
@@ -897,9 +880,10 @@ def monthly_revenue_growth(lineitem: DataFrame) -> DataFrame:
         F.date_trunc("month", F.col("l_shipdate")).alias("month")
     ).agg(rev.alias("__rev"))
     w = Window.partitionBy(single_partition_key("month")).orderBy("month")
-    prev = F.lag("__rev").over(w)
+    prev = F.col("__prev")
     return (
-        monthly.select(
+        monthly.withColumn("__prev", F.lag("__rev").over(w))
+        .select(
             "month",
             F.round(F.col("__rev"), 2).cast("double").alias("revenue"),
             F.round(prev, 2).cast("double").alias("prev_revenue"),

@@ -41,11 +41,16 @@ def bollinger_bands(
 ) -> DataFrame:
     """SMA(n) ± k·stddev(n) over close, plus %B position in band."""
     w = Window.partitionBy(partition_col).orderBy(order_col).rowsBetween(-(n - 1), 0)
-    mid = F.avg("close_price").over(w)
-    sd = F.stddev_samp("close_price").over(w)
+    mid, sd = F.col("__mid"), F.col("__sd")
     upper = mid + k * sd
     lower = mid - k * sd
     return returns.select(
+        partition_col,
+        order_col,
+        "close_price",
+        F.avg("close_price").over(w).alias("__mid"),
+        F.stddev_samp("close_price").over(w).alias("__sd"),
+    ).select(
         partition_col,
         order_col,
         "close_price",
@@ -66,9 +71,14 @@ def stochastic_k(
 ) -> DataFrame:
     """%K = (close − min(low,n)) / (max(high,n) − min(low,n)) · 100."""
     w = Window.partitionBy(partition_col).orderBy(order_col).rowsBetween(-(n - 1), 0)
-    hi = F.max("high_price").over(w)
-    lo = F.min("low_price").over(w)
+    hi, lo = F.col("__hi"), F.col("__lo")
     return returns.select(
+        partition_col,
+        order_col,
+        "close_price",
+        F.max("high_price").over(w).alias("__hi"),
+        F.min("low_price").over(w).alias("__lo"),
+    ).select(
         partition_col,
         order_col,
         "close_price",
@@ -183,7 +193,7 @@ def atr_obv(
     w_ord = Window.partitionBy(partition_col).orderBy(order_col)
     w_trail = w_ord.rowsBetween(-(n - 1), 0)
     w_run = w_ord.rowsBetween(Window.unboundedPreceding, 0)
-    prev_close = F.lag("close_price").over(w_ord)
+    prev_close = F.col("__prev_close")
     tr = F.when(
         prev_close.isNull(), F.col("high_price") - F.col("low_price")
     ).otherwise(
@@ -199,15 +209,21 @@ def atr_obv(
         .otherwise(F.lit(0))
     )
     return (
-        bars.withColumn("__tr", tr)
-        .withColumn("__flow", flow.cast("long"))
+        bars.withColumn("__prev_close", F.lag("close_price").over(w_ord))
+        .withColumns({"__tr": tr, "__flow": flow.cast("long")})
+        .withColumns(
+            {
+                "__atr": F.avg("__tr").over(w_trail),
+                "obv": F.sum("__flow").over(w_run).cast("long"),
+            }
+        )
         .select(
             partition_col,
             order_col,
             "close_price",
             round_away(F.col("__tr"), 4).alias("true_range"),
-            round_away(F.avg("__tr").over(w_trail), 4).alias(f"atr_{n}"),
-            F.sum("__flow").over(w_run).cast("long").alias("obv"),
+            round_away(F.col("__atr"), 4).alias(f"atr_{n}"),
+            "obv",
         )
     )
 
@@ -233,17 +249,16 @@ def drawdown(
     w_all = w_ord.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    peak = F.max("close_price").over(w_run)
-    dd = F.col("close_price") / peak - F.lit(1.0)
     return (
-        bars.withColumn("__peak", peak)
-        .withColumn("__dd", dd)
+        bars.withColumn("__peak", F.max("close_price").over(w_run))
+        .withColumn("__dd", F.col("close_price") / F.col("__peak") - F.lit(1.0))
+        .withColumn("__max_dd", F.min("__dd").over(w_all))
         .select(
             partition_col,
             order_col,
             "close_price",
             F.col("__peak").alias("peak_close"),
             round_away(F.col("__dd"), 6).alias("drawdown_pct"),
-            round_away(F.min("__dd").over(w_all), 6).alias("max_drawdown_pct"),
+            round_away(F.col("__max_dd"), 6).alias("max_drawdown_pct"),
         )
     )

@@ -96,27 +96,35 @@ def stock_performance(
             order_col,
         )
 
-    high_52w = F.max("high_price").over(w52)
-    low_52w = F.min("low_price").over(w52)
-
-    out = enriched.withColumns(
-        {
-            "ma_signal_5_20": crossover_signal("sma_5d", "sma_20d"),
-            "ma_signal_10_50": crossover_signal("sma_10d", "sma_50d"),
-            "is_high_volume_day": F.when(
-                F.col("volume_vs_avg_20d") >= 2.0, F.lit(True)
-            ).otherwise(F.lit(False)),
-            "rsi_signal": F.when(F.col("rsi_14") >= 70, F.lit("OVERBOUGHT"))
-            .when(F.col("rsi_14") <= 30, F.lit("OVERSOLD"))
-            .otherwise(F.lit("NEUTRAL")),
-            "high_52w": high_52w,
-            "low_52w": low_52w,
-            "pct_of_52w_range": round_away(
-                null_if_zero_divide(F.col("close_price") - low_52w, high_52w - low_52w) * 100,
-                2,
-            ),
-        }
-    ).select(*PERFORMANCE_COLUMNS)
+    out = (
+        enriched.withColumns(
+            {
+                "high_52w": F.max("high_price").over(w52),
+                "low_52w": F.min("low_price").over(w52),
+            }
+        )
+        .withColumns(
+            {
+                "ma_signal_5_20": crossover_signal("sma_5d", "sma_20d"),
+                "ma_signal_10_50": crossover_signal("sma_10d", "sma_50d"),
+                "is_high_volume_day": F.when(
+                    F.col("volume_vs_avg_20d") >= 2.0, F.lit(True)
+                ).otherwise(F.lit(False)),
+                "rsi_signal": F.when(F.col("rsi_14") >= 70, F.lit("OVERBOUGHT"))
+                .when(F.col("rsi_14") <= 30, F.lit("OVERSOLD"))
+                .otherwise(F.lit("NEUTRAL")),
+                "pct_of_52w_range": round_away(
+                    null_if_zero_divide(
+                        F.col("close_price") - F.col("low_52w"),
+                        F.col("high_52w") - F.col("low_52w"),
+                    )
+                    * 100,
+                    2,
+                ),
+            }
+        )
+        .select(*PERFORMANCE_COLUMNS)
+    )
     if include_audit:
         out = out.withColumn("dbt_updated_at", F.current_timestamp())
     return out

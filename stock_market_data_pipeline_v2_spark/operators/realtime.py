@@ -222,15 +222,21 @@ def enrich_realtime(staged: DataFrame) -> DataFrame:
     trailing 4-window averages, C1-C3 signals."""
     w = Window.partitionBy("symbol").orderBy("window_start_at")
     w4 = w.rowsBetween(-3, 0)
-    avg_vol_1h = round_away(F.avg("volume_15m").over(w4), 0)
-    avg_volat_1h = round_away(F.avg("volatility_15m").over(w4), 4)
+    # each window aggregate projected once; round_away reads its
+    # argument three times (PERF.md lesson 10)
     with_deltas = staged.select(
         "*",
-        round_away(F.col("ma_15m") - F.lag("ma_15m").over(w), 4).alias("ma_15m_delta"),
-        round_away(F.col("ma_1h") - F.lag("ma_1h").over(w), 4).alias("ma_1h_delta"),
+        F.lag("ma_15m").over(w).alias("__prev_ma_15m"),
+        F.lag("ma_1h").over(w).alias("__prev_ma_1h"),
+        F.avg("volume_15m").over(w4).alias("__avg_vol_1h"),
+        F.avg("volatility_15m").over(w4).alias("__avg_volat_1h"),
+    ).select(
+        *staged.columns,
+        round_away(F.col("ma_15m") - F.col("__prev_ma_15m"), 4).alias("ma_15m_delta"),
+        round_away(F.col("ma_1h") - F.col("__prev_ma_1h"), 4).alias("ma_1h_delta"),
         round_away(F.col("ma_15m") - F.col("ma_1h"), 4).alias("ma_spread"),
-        avg_vol_1h.alias("avg_volume_1h"),
-        avg_volat_1h.alias("avg_volatility_1h"),
+        round_away("__avg_vol_1h", 0).alias("avg_volume_1h"),
+        round_away("__avg_volat_1h", 4).alias("avg_volatility_1h"),
     )
     return with_deltas.select(
         "*",

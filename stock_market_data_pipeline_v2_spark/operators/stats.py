@@ -240,11 +240,8 @@ def rolling_beta(returns: DataFrame, n: int = 10) -> DataFrame:
     )
     x = F.col("daily_return_pct")
     y = F.col("mret")
-    cnt = F.count(F.lit(1)).over(w)
-    sx = F.sum(x).over(w)
-    sy = F.sum(y).over(w)
-    sxy = F.sum(x * y).over(w)
-    syy = F.sum(y * y).over(w)
+    # window sums projected once, then combined (PERF.md lesson 10)
+    cnt, sx, sy, sxy, syy = map(F.col, ("__cnt", "__sx", "__sy", "__sxy", "__syy"))
     beta_raw = (cnt * sxy - sx * sy) / F.nullif(
         cnt * syy - sy * sy, F.lit(0.0)
     )
@@ -252,14 +249,17 @@ def rolling_beta(returns: DataFrame, n: int = 10) -> DataFrame:
         j.select(
             "symbol",
             "trade_date",
-            cnt.alias("__cnt"),
-            beta_raw.alias("__b"),
+            F.count(F.lit(1)).over(w).alias("__cnt"),
+            F.sum(x).over(w).alias("__sx"),
+            F.sum(y).over(w).alias("__sy"),
+            F.sum(x * y).over(w).alias("__sxy"),
+            F.sum(y * y).over(w).alias("__syy"),
         )
-        .filter(F.col("__cnt") == n)
+        .filter(cnt == n)
         .select(
             "symbol",
             "trade_date",
-            round_away(F.col("__b"), 6).alias(f"beta_{n}d"),
+            round_away(beta_raw, 6).alias(f"beta_{n}d"),
         )
         .orderBy("symbol", "trade_date")
     )
@@ -296,9 +296,10 @@ def cross_sectional_ranks(returns: DataFrame) -> DataFrame:
             "daily_return_pct",
             "volume",
             F.row_number().over(w_ret).cast("long").alias("return_rank"),
-            round_away(F.percent_rank().over(w_ret), 6).alias("return_pct_rank"),
+            F.percent_rank().over(w_ret).alias("return_pct_rank"),
             F.row_number().over(w_vol).cast("long").alias("volume_rank"),
         )
+        .withColumn("return_pct_rank", round_away(F.col("return_pct_rank"), 6))
         .orderBy("trade_date", "return_rank")
     )
 
@@ -414,12 +415,9 @@ def pattern_match_topk(returns: DataFrame, k: int = 25, window: int = 20) -> Dat
 
     q = _pattern_weights(window)
     w = Window.partitionBy("symbol").orderBy("trade_date")
-    lags = [
-        F.col("daily_return_pct")
-        if j == 0
-        else F.lag("daily_return_pct", j).over(w)
-        for j in range(window)
-    ]
+    # each lag projected once as __lag{j}: the chains below read every
+    # lag three times (PERF.md lesson 10)
+    lags = [F.col("daily_return_pct")] + [F.col(f"__lag{j}") for j in range(1, window)]
 
     def chain(terms):
         out = terms[0]
@@ -438,7 +436,16 @@ def pattern_match_topk(returns: DataFrame, k: int = 25, window: int = 20) -> Dat
         F.desc("corr_raw"), F.asc("symbol"), F.asc("trade_date")
     )
     return (
-        returns.select("symbol", "trade_date", corr_raw.alias("corr_raw"))
+        returns.select(
+            "symbol",
+            "trade_date",
+            "daily_return_pct",
+            *(
+                F.lag("daily_return_pct", j).over(w).alias(f"__lag{j}")
+                for j in range(1, window)
+            ),
+        )
+        .select("symbol", "trade_date", corr_raw.alias("corr_raw"))
         .filter(F.col("corr_raw").isNotNull())
         .orderBy(F.desc("corr_raw"), F.asc("symbol"), F.asc("trade_date"))
         .limit(k)
@@ -604,24 +611,27 @@ def funnel_conversion(
     first_n = F.first("n_users").over(
         w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    prev_n = F.lag("n_users").over(w)
+
+    def ratio_to(base: str):
+        return round_away(
+            F.col("n_users").cast("double")
+            / F.nullif(F.col(base).cast("double"), F.lit(0.0)),
+            6,
+        )
+
     return (
-        rows.withColumn(
-            "conversion_from_prev",
-            round_away(
-                F.col("n_users").cast("double")
-                / F.nullif(prev_n.cast("double"), F.lit(0.0)),
-                6,
-            ),
+        rows.select(
+            "*",
+            F.lag("n_users").over(w).alias("__prev_n"),
+            first_n.alias("__first_n"),
         )
-        .withColumn(
-            "conversion_from_first",
-            round_away(
-                F.col("n_users").cast("double")
-                / F.nullif(first_n.cast("double"), F.lit(0.0)),
-                6,
-            ),
+        .withColumns(
+            {
+                "conversion_from_prev": ratio_to("__prev_n"),
+                "conversion_from_first": ratio_to("__first_n"),
+            }
         )
+        .drop("__prev_n", "__first_n")
         .orderBy("stage_idx")
     )
 

@@ -108,8 +108,7 @@ def scd2_history(
         F.col(ts_col).alias("valid_from"),
         F.lead(ts_col).over(w2).alias("valid_to"),
         F.row_number().over(w2).cast("long").alias("version"),
-        F.lead(ts_col).over(w2).isNull().alias("is_current"),
-    )
+    ).withColumn("is_current", F.col("valid_to").isNull())
 
 
 def snapshot_diff(

@@ -359,25 +359,6 @@ def daily_bars_checks() -> list[Check]:
     ]
 
 
-def realtime_checks() -> list[Check]:
-    return [
-        expect_not_null("symbol"),
-        expect_not_null("window_start_at"),
-        expect_not_null("window_end_at"),
-        expect_accepted_values(
-            "momentum_signal", ["BULLISH", "BEARISH", "NEUTRAL"]
-        ),
-        expect_accepted_values(
-            "volatility_regime", ["LOW", "NORMAL", "ELEVATED", "HIGH"]
-        ),
-        expect_zero_rows(
-            "stream_window_integrity",
-            (F.col("window_end_at") <= F.col("window_start_at"))
-            | (F.col("window_duration_minutes") <= 0),
-        ),
-    ]
-
-
 def star_contract_lineitem() -> tuple[list[Check], list[list[str]]]:
     """The registered data_quality_report's lineitem contract — one
     literal list, mirrored verbatim by DATA_QUALITY_REPORT_SQL."""
@@ -618,13 +599,11 @@ def benford_audit(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     case = F.when(F.col("digit") == 1, F.lit(BENFORD_EXPECTED[1]))
     for d in range(2, 10):
         case = case.when(F.col("digit") == d, F.lit(BENFORD_EXPECTED[d]))
-    shared = counts.select(
+    shared = counts.withColumn("__total", F.sum("n").over(w)).select(
         "source_column",
         "digit",
         "n",
-        round_away(
-            F.col("n").cast("double") / F.sum("n").over(w), 6
-        ).alias("share"),
+        round_away(F.col("n").cast("double") / F.col("__total"), 6).alias("share"),
         case.alias("expected_share"),
     )
     return shared.select(

@@ -21,6 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..operators.bars import bars_from_events, filter_clean_bars
 from ..operators.performance import stock_performance
@@ -79,7 +80,11 @@ def run_batch_pipeline(
             write_parquet(bars, silver_path, mode="overwrite", partition_cols=["symbol"])
     else:
         write_parquet(bars, silver_path, mode="overwrite", partition_cols=["symbol"])
-    silver = spark.read.parquet(silver_path)
+    # Read back with the schema in hand (no schema-inference job); a
+    # partitioned zone reads its partition column last.
+    silver = spark.read.schema(
+        StructType([f for f in bars.schema if f.name != "symbol"] + [bars.schema["symbol"]])
+    ).parquet(silver_path)
 
     report = validate(
         silver, daily_bars_checks(), unique_keys=[["symbol", "trade_date"]]
@@ -88,17 +93,18 @@ def run_batch_pipeline(
         raise ValueError(f"quality gate failed: {report.failures}")
 
     perf = stock_performance(silver)
-    write_clustered(
-        perf, f"{out_root}/gold/stock_performance", cluster_cols=["symbol", "trade_date"]
-    )
-    perf_out = spark.read.parquet(f"{out_root}/gold/stock_performance")
+    perf_path = f"{out_root}/gold/stock_performance"
+    write_clustered(perf, perf_path, cluster_cols=["symbol", "trade_date"])
+    perf_out = spark.read.schema(perf.schema).parquet(perf_path)
 
     summ = daily_summary(perf_out)
-    write_clustered(summ, f"{out_root}/gold/daily_summary", cluster_cols=["trade_date"])
+    summ_path = f"{out_root}/gold/daily_summary"
+    write_clustered(summ, summ_path, cluster_cols=["trade_date"])
 
     return PipelineResult(
-        silver_rows=silver.count(),
+        # the gate already counted the silver frame
+        silver_rows=report.total_rows,
         performance_rows=perf_out.count(),
-        summary_rows=spark.read.parquet(f"{out_root}/gold/daily_summary").count(),
+        summary_rows=spark.read.schema(summ.schema).parquet(summ_path).count(),
         checks=report,
     )
