@@ -319,9 +319,18 @@ def classifier_calibration(
     j = lab.join(scored, "doc_id")
 
     par = documents.sparkSession.sparkContext.defaultParallelism
-    ranged = j.repartitionByRange(
-        par, F.asc("quality_logit"), F.asc("doc_id")
-    ).withColumn("__pid", F.spark_partition_id())
+    # CACHED (PERF.md lesson 8): `ranged` feeds both the local
+    # row_number and the per-pid counts, and column pruning makes the
+    # two subtrees' range exchanges differ, so neither is reused. Each
+    # evaluation samples its own RangePartitioner bounds; once the
+    # input is sampled rather than read whole (sf0.1 at local[4]) the
+    # two pid assignments disagree and the ranks overlap or skip.
+    # Callers release it via `_cached_inputs`.
+    ranged = (
+        j.repartitionByRange(par, F.asc("quality_logit"), F.asc("doc_id"))
+        .withColumn("__pid", F.spark_partition_id())
+        .cache()
+    )
     w_loc = Window.partitionBy("__pid").orderBy(
         F.asc("quality_logit"), F.asc("doc_id")
     )
@@ -363,7 +372,7 @@ def classifier_calibration(
         F.min("quality_logit").alias("min_logit"),
         F.max("quality_logit").alias("max_logit"),
     )
-    return agg.select(
+    out = agg.select(
         "score_bin",
         "n_docs",
         "n_pos",
@@ -376,6 +385,8 @@ def classifier_calibration(
         "min_logit",
         "max_logit",
     ).orderBy("score_bin")
+    out._cached_inputs = (ranged,)
+    return out
 
 
 def classifier_calibration_oracle_sql(n_bins: int = 10) -> str:

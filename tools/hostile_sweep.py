@@ -8,9 +8,9 @@ This is the round-4 hostile-session contract (PERF.md "Determinism
 under hostile sessions") as a committed, repeatable tool instead of
 an ad-hoc driver: the driver owns the session, so every registered
 query must produce BIT-identical output no matter the master/
-partitioning/timezone it arrives with (queries call
-``session.configure_runtime`` for the one conf that is semantic —
-parquet nanos). A query whose result depends on partition count or
+partitioning/timezone it arrives with (the registry applies
+``session.configure_runtime`` before every query, for the one conf
+that is semantic — parquet nanos). A query whose result depends on partition count or
 session TZ fails the DuckDB hash compare here even when the default
 local[32]/UTC sweep is green.
 
