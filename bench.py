@@ -214,7 +214,7 @@ HEADLINE = [
     "txn_stream_sink",          # added round 11: idempotent micro-batch commits (replay skipped)
     "txn_delete",               # added round 12: selective COW DELETE + expire_snapshots+vacuum
     "txn_schema_evolution",     # added round 12: additive evolve-schema, zero-rewrite null-fill read
-    #   (own build-once lineages, memoized through __spark_entry__._memo:
+    #   (own build-once lineages, memoized through sources.io.memo:
     #   the rows time the committed-snapshot READ; builds land in run 1)
 ]
 

@@ -39,8 +39,6 @@ STATE_DIR = Path(__file__).resolve().parent / "index_state"
 # _pq_index and the tier defaults).
 IVF_N_ASSIGN = 3
 IVF_N_PROBE = 16
-PQ_M = 16
-PQ_KSUB = 16
 DIM = 64
 K = 5
 PQ_FETCH = 40  # refine(8) · k(5)
@@ -337,9 +335,6 @@ SELECT id, cell, round(proto, 6) AS prototypicality, cell_rank,
        cell_rank <= CAST(ceil(cell_n * {PROTO_KEEP_FRACTION}) AS BIGINT) AS keep
 FROM r
 """
-
-
-PROFILE_Q_SCALE = 10**9  # mirrors similarity.IVF_PROFILE_Q_SCALE
 
 
 def _sqdist_chain(a: str, b: str, dim: int = DIM) -> str:

@@ -12,7 +12,6 @@ quirk 5).
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    DateType,
     DoubleType,
     LongType,
     StringType,
@@ -33,21 +32,6 @@ RAW_DAILY_BARS = StructType(
         StructField("daily_close", DoubleType()),
         StructField("daily_volume", LongType()),
         StructField("batch_load_timestamp", StringType()),
-    ]
-)
-
-# Cleaned daily bars (silver) — output of operators.bars.clean_daily_bars
-# (reference: spark_batch_processor.py:41-54 + stg_daily_stock_metrics.sql).
-CLEAN_DAILY_BARS = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("trade_date", DateType()),
-        StructField("open_price", DoubleType()),
-        StructField("high_price", DoubleType()),
-        StructField("low_price", DoubleType()),
-        StructField("close_price", DoubleType()),
-        StructField("volume", LongType()),
-        StructField("batch_loaded_at", TimestampType()),
     ]
 )
 

@@ -45,20 +45,37 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-# (r12 optimization) per-session PLAN memo for load_table: resolving
-# a parquet source costs a measured ~0.14 s of driver work PER CALL
-# (file listing + footer/schema resolution + py4j), and the bench
-# makes hundreds of load_table calls per run. The memoized value is
-# the LAZY analyzed DataFrame — an immutable plan, zero rows of
-# state: every action on it still scans the parquet files, so this
-# is plan-build amortization (guide §1.2 step 2 driver-side), not
-# result caching. Keyed by applicationId so a new session never sees
-# a stale plan.
-_LOAD_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+# The one memo of build-once state, keyed (applicationId, sf_dir,
+# name): a fresh driver session never sees another session's state.
+# It holds plans and indexes, never query results: the LAZY plans of
+# the testdata tables (``"<table>.parquet"``; resolving a parquet
+# source costs ~0.14 s of listing, footer reads and py4j) and of the
+# most shared derived frames (the bar/tick cleaning chains, ~0.2-0.35 s
+# of plan construction), whose every action still scans parquet; and
+# built INDEX state (the near-dup pair graph and the co-purchase graph
+# via localCheckpoint, the IVF/PQ indexes, the txn demo tables), paid
+# once per session. Every build is deterministic.
+_MEMO: dict[tuple[str, str, str], object] = {}
+
+
+def memo(spark: SparkSession, sf_dir: str, name: str, build):
+    """The memoized value ``name`` for this application and ``sf_dir``,
+    built by ``build()`` on the first call. A DataFrame comes back as a
+    fresh ``select("*")`` over it, never the memo's own DataFrame: an
+    action on a shared DataFrame executes its QueryExecution, after
+    which the next caller's extended explain also prints AQE's
+    ``== Initial Plan ==`` (every exchange counted twice). Any other
+    value (an index, a graph tuple, a TxnTable) comes back as stored."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    if key not in _MEMO:
+        _MEMO[key] = build()
+    value = _MEMO[key]
+    return value.select("*") if isinstance(value, DataFrame) else value
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver testdata table (TESTDATA.md).
+    """Load one driver testdata table (TESTDATA.md), memoized as
+    ``"<name>.parquet"``.
 
     ``events.ts`` is stored as parquet TIMESTAMP(NANOS); with
     ``spark.sql.legacy.parquet.nanosAsLong`` it scans as long
@@ -66,16 +83,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (truncating division — the same ns→µs truncation DuckDB applies
     when casting TIMESTAMP_NS to TIMESTAMP).
     """
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _LOAD_TABLE_MEMO.get(key)
-    if df is None:
+
+    def read() -> DataFrame:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if name == "events" and dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts div 1000"))
             )
-        _LOAD_TABLE_MEMO[key] = df
-    return df
+        return df
+
+    return memo(spark, sf_dir, f"{name}.parquet", read)
 
 
 def write_parquet(
