@@ -20,203 +20,20 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-# Heavy representatives of each operator family (SURVEY.md §2).
-HEADLINE = [
-    "stock_performance",
-    "daily_summary",
-    "bollinger_bands",
-    "stochastic_k",
-    "macd",
-    "atr_obv",            # added round 4: ATR + OBV window pass
-    "drawdown",           # added round 4: running-peak drawdown mart
-    "rolling_beta",       # added round 4: rolling CAPM beta
-    "cross_sectional_ranks",  # added round 4: per-date relative strength
-    "pmi_collocations",   # added round 4: PMI phrase mining
-    "sharpe_ratios",      # added round 4: annualized strategy summary
-    "monthly_revenue_growth",  # added round 4: MoM trend mart
-    "asof_tick_bar",
-    "daily_vwap",          # added round 3
-    "multi_grain_bars",    # added round 3: grouping-sets single pass
-    "forward_fill_bars",   # added round 3
-    "session_windows",
-    "regional_supplier_revenue",
-    "promo_revenue_monthly",    # added round 3: Q14 shape
-    "small_qty_part_revenue",   # added round 3: Q17 shape
-    "order_priority_rollup",
-    "balance_rich_dormant",   # added round 4: Q22 shape
-    "min_cost_supplier",      # added round 4: Q2 shape (window argmin)
-    "nation_revenue_share",   # added round 4: Q11 shape
-    "bilateral_trade",        # added round 4: Q7 shape (two-role dims)
-    "disjunctive_brand_revenue",  # added round 4: Q19 shape
-    "top_return_customers",   # added round 4: Q10 shape
-    "banded_discount_revenue",  # added round 5: Q6 shape (pushdown agg)
-    "nation_market_share",      # added round 5: Q8 shape (share of star)
-    "supplier_nation_profit",   # added round 5: Q9 shape (cost-proxy profit)
-    "customer_order_distribution",  # added round 5: Q13 shape (outer-join histogram)
-    "top_supplier_revenue",     # added round 5: Q15 shape (max with ties)
-    "part_supplier_counts",     # added round 5: Q16 shape (distinct-pair counts)
-    "event_type_pivot",
-    "top_volume_days",
-    "return_correlations",
-    "similar_symbols",         # round 5: per-symbol correlated-peer top-k
-    "pattern_match",           # round 5: z-normalized subsequence matching
-    "cohort_retention",        # round 5: weekly first-activity cohorts
-    "funnel_conversion",       # round 5: ordered within-window funnel
-    "market_beta",            # added round 3 (late): CAPM factor mart
-    "event_value_quantiles",  # added round 3 (late): ordered-set aggregates
-    "walk_forward_splits",    # added round 3 (late): temporal CV folds
-    "dedup_embedding_blas",
-    "dedup_embedding_ivf",  # added round 3: sub-quadratic SemDeDup tier
-    "window_agg_15m",
-    "windowed_analytics",
-    "windowed_analytics_reagg",
-    "realtime_signals",
-    "pricing_summary",
-    "top_revenue_orders",
-    "regional_customer_summary",
-    "merge_upsert",
-    "snapshot_diff",          # added round 3: CDC from full snapshots
-    "scd2_user_status",       # added round 3: SCD2 dimension history
-    "large_volume_customers",  # added round 3: Q18 aggregate-then-broadcast shape
-    "dedup_exact",
-    "repeated_spans",     # added round 4: ExactSubstr passage-reuse stats
-    "repeated_spans_rolling",  # round 5: token-id rolling-hash production tier
-    "ann_filtered_topk",       # round 5: pre-filtered (same-label) exact search
-    "ngram_decontaminate",     # round 5: exact 13-gram benchmark decontamination
-    "temperature_mix",         # round 5: T=1/2 multinomial source budgets
-    "dedup_clusters_star",     # added round 3 (late): log-round CC family row
-    "dedup_keep_best",         # added round 3 (late): quality arbitration
-    "dedup_incremental_lsh",   # added round 3 (late): LSH admission tier
-    "dedup_incremental",  # added round 3: batch-vs-corpus admission
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_embedding",
-    "ann_cosine_topk",
-    "ann_cosine_topk_blas",  # added round 3: BLAS exact tier, same oracle
-    "ann_lsh_topk",
-    "ann_ivf_topk",  # added round 2 (headline total +1 query vs r01)
-    "ann_pq_topk",   # added round 3: PQ/ADC compressed-scan tier
-    "ann_ivfpq_topk",  # added round 3: IVF x PQ composition
-    "bm25_topk",          # added round 3: lexical retrieval family
-    "tfidf_topk",         # added round 4: per-doc TF-IDF keyword extraction
-    "shingle_novelty",    # added round 4: novelty/contribution scoring
-    "cross_source_contamination",  # added round 4: source-pair near-dup matrix
-    "passage_overlap",    # added round 3: winnowing fingerprint join
-    "text_quality",
-    "lang_id",
-    "doc_fingerprint",
-    "pii_scrub",         # added round 2
-    "strip_html",        # added round 3 (late): crawl HTML extraction
-    "split_sentences",   # added round 3 (late): sentence grain
-    "dedup_sentences",   # added round 4: within-doc repeat removal
-    "lm_perplexity",     # added round 3: CCNet-style LM quality scoring
-    "lm_perplexity_cross",  # added round 4: reference-model scoring (CCNet production shape)
-    "boilerplate_prefixes",  # added round 3: cross-doc prefix shares
-    "hash_embeddings",       # added round 3: feature-hash featurization
-    "winsorize_ticks",       # added round 3: percentile outlier clamp
-    "gopher_filter",     # added round 2
-    "chunk_documents",   # added round 2
-    "token_frequency",   # added round 2
-    "bpe_token_counts",  # added round 3: window-algebra BPE encoder
-    "stratified_sample", # added round 2
-    "shuffle_corpus",    # added round 3: deterministic global permutation
-    "ngram_containment", # added round 2
-    "leakage_safe_split",     # added round 3: group-aware split
-    "importance_resample",    # added round 3: DSIR selection
-    "pack_sequences",    # added round 2
-    "sft_render_spans",       # added round 3 (late): SFT loss-mask spans
-    "length_bucket_batches",  # added round 3 (late): padding-efficient batching
-    "prototypicality_prune",  # added round 3: D4-style pruning off the IVF index
-    "quality_decile_bins",    # added round 3: exact global quality ranking
-    "curation_pipeline",      # added round 3: integrated cleaning pass
-    "corpus_stats_by_source", # added round 3: per-source corpus profile
-    "source_drift_kl",        # added round 3: per-source KL drift monitor
-    "zorder_events",          # added round 3: scan-shaped Morton z-values
-    "hilbert_events",         # round 5: locality-preserving layout twin
-    "multimodal_decode",
-    "audio_features",  # added round 3: REAL stdlib WAV/PCM codec tier
-    "image_features",  # added round 3: REAL zlib/struct PNG codec tier
-    "hll_event_users",          # added round 6: cross-engine HLL sketch
-    "dedup_sorted_neighborhood",  # added round 6: sort-based SNM dedup tier
-    "embedding_diversity",      # added round 6: O(n) norm-of-sum diversity
-    "part_name_fuzzy_pairs",    # added round 6: blocked Levenshtein linkage
-    "profile_lineitem",         # added round 6: one-pass column profiler
-    "order_value_distribution", # added round 6: ntile/percent_rank deciles
-    "type_token_stats",         # added round 6: per-source lexical profile
-    "bloom_decontaminate",      # added round 6: fixed-size Bloom decontamination tier
-    "event_value_quantile_sketch",  # added round 6: cross-engine histogram quantiles
-    "event_transitions",        # added round 6: Markov transition matrix
-    "part_pagerank",            # added round 6: fixed-point K-step PageRank
-    "dedup_prefix_filter",      # added round 6: lossless ppjoin prefix tier
-    "lineitem_profile_drift",   # added round 6: two-slice profile diff
-    "hll_daily_rollup",         # added round 6: mergeable sketch rollup
-    "cms_token_frequency",      # added round 6: count-min heavy hitters
-    "part_triangles",           # added round 6: degree-ordered triangles
-    "return_moments",           # added round 6: integer-power-sum skew/kurt
-    "return_outliers",          # added round 6: MAD robust anomaly days
-    "sector_activity_sketch",   # round 7: re-based on in-house sketches (hash-gated)
-    "profile_lineitem_sketch",  # added round 7: profiler HLL tier (no Expand)
-    "part_kcore",               # added round 7: R-round k-peel (graph memo)
-    "quality_classifier",       # added round 7: frozen-weight linear quality model
-    "hll_user_overlap",         # added round 7: HLL set algebra (union/intersection)
-    "embedding_top_component",  # added round 7: integer-exact power iteration (top PC)
-    "lineitem_profile_drift_sketch",  # added round 7: drift audit on the HLL tier
-    "source_quality_profile",   # added round 7: per-source classifier rollup
-    "weighted_price_median",    # added round 7: integer-decided weighted quantile
-    "classifier_auc_report",    # added round 7: in-engine Mann-Whitney AUC
-    "copurchase_rules",         # added round 7: market-basket association rules
-    "lang_id_confusion",        # added round 7: language-ID confusion matrix
-    "histogram_daily_rollup",   # added round 8: mergeable quantile-sketch rollup
-    "part_components",          # added round 8: K-step CC (4th graph-memo consumer)
-    "ivf_cluster_profile",      # added round 8: IVF index-health report
-    "shipping_priority_topk",   # added round 8: Q3 shape (decimal top-k)
-    "returnflag_priority_counts",  # added round 8: Q12 shape (CASE counts)
-    "dominant_part_suppliers",  # added round 8: Q20 shape (nested semi-joins)
-    "cms_daily_rollup",         # added round 8: mergeable CMS rollup
-    "pq_subspace_profile",      # added round 8: PQ index-health report
-    "ann_index_extend",         # added round 8: incremental ADD path (IVF)
-    "pq_index_extend",          # added round 8: incremental ADD path (PQ)
-    "bloom_daily_rollup",       # added round 8: mergeable Bloom rollup
-    "range_frame_revenue",      # added round 9: time-RANGE window frames
-    "join_skew_profile",        # added round 9: shuffle-key skew diagnostic
-    "salted_join_revenue",      # added round 9: salt-split skew join (oracle = plain join)
-    "degree_distribution",      # added round 9: graph degree histogram (memo consumer 5)
-    "link_prediction",          # added round 9: seeded common-neighbor predictions (consumer 6)
-    "classifier_calibration",   # added round 9: logit-bin reliability report
-    "minhash_estimate_audit",   # added round 9: sketch-vs-exact Jaccard audit
-    "hard_negative_mining",     # added round 9: contrastive cross-label negatives
-    "ann_sq8_topk",             # added round 9: SQ8 scalar-quantization ANN tier
-    "hard_negative_ivf",        # added round 9: IVF-bucketed hard negatives (scale path)
-    "salted_event_stats",       # added round 9: two-phase salted GROUP BY (oracle = plain)
-    "market_concentration",     # added round 9: HHI supplier concentration per nation
-    "data_quality_report",      # added round 9: dbt-test contract as one pass per table
-    "referential_integrity_audit",  # added round 9: 7-FK-edge orphan audit
-    "part_skyline",             # added round 9: per-brand pareto frontier
-    "label_centroid_similarity",    # added round 9: class separation/coherence audit
-    "label_loo_outliers",       # added round 9: LOO-centroid mislabel audit
-    "knn_label_eval",           # added round 9: LOO 1-NN label accuracy (BLAS-exact tier)
-    "part_abc_analysis",        # added round 9: ABC/Pareto revenue classes
-    "rake_keywords",            # added round 9: RAKE keyword phrases
-    "benford_audit",            # added round 9: Benford first-digit audit
-    "event_metrics_unpivot",    # added round 9: native unpivot melt
-    "orders_cube",              # added round 9: full CUBE + grouping_id
-    "tick_gap_report",          # added round 9: feed-continuity gap audit
-    "knn_label_eval_ivf",       # added round 10: IVF twin of the LOO 1-NN eval
-    "stateful_features",        # added round 10: keyed-state fold, batch twin
-    "pipeline_lineage",         # added round 10: dbt docs/lineage manifest as data
-    "txn_merge_upsert",         # added round 10: MERGE through the ACID manifest path
-    #   (r11: the txn demo lineage — create→merge→optimize→merge — is
-    #   build-once/query-many like the ANN indexes; the build lands in
-    #   run 1 and best-of-2 reports the committed-snapshot read path)
-    "txn_time_travel",          # added round 11: pinned-version read off the same lineage
-    "txn_pruned_read",          # added round 11: zone-map file skipping at read time
-    "txn_stream_sink",          # added round 11: idempotent micro-batch commits (replay skipped)
-    "txn_delete",               # added round 12: selective COW DELETE + expire_snapshots+vacuum
-    "txn_schema_evolution",     # added round 12: additive evolve-schema, zero-rewrite null-fill read
-    #   (own build-once lineages, memoized through sources.io.memo:
-    #   the rows time the committed-snapshot READ; builds land in run 1)
-]
+# The headline is every registered query but these, in _QUERY_ORDER
+# order. Each repeats a plan that a timed row already covers (daily_bars
+# and daily_returns run inside stock_performance; ann_recall_report
+# recomputes four timed ANN tiers), so leaving them out keeps the total
+# comparable across rounds (BASELINE.md).
+NOT_HEADLINE = (
+    "dedup_clusters", "rolling_indicators", "daily_returns",
+    "ann_recall_report", "multimodal_frames", "multimodal_resize",
+    "returned_orders_by_priority", "dormant_customers",
+    "exclusive_fault_suppliers", "daily_bars", "windowed_analytics_range_join",
+    "repetition_filter", "mix_corpus", "importance_weights",
+    "winnow_fingerprints", "passage_clusters", "hybrid_search_rrf",
+    "multimodal_meta", "symbols_both_halves", "users_only_before",
+)
 
 
 def main() -> None:
@@ -231,7 +48,7 @@ def main() -> None:
 
     spark = get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
     qs = entrymod.queries()
-    names = [n for n in HEADLINE if n in qs]
+    names = [n for n in qs if n not in NOT_HEADLINE]
 
     # Warm the JVM/session on a trivial plan so query 1 isn't charged startup.
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -347,7 +164,7 @@ def _git_head() -> str:
 
 def _short_keys(names: list[str]) -> dict[str, str]:
     """Deterministic per-query abbreviations (initials of underscore
-    tokens; numeric suffix on collision) — stable for a fixed HEADLINE
+    tokens; numeric suffix on collision) — stable for a fixed headline
     order, published in BENCH.out's key_map."""
     out: dict[str, str] = {}
     used: set[str] = set()

@@ -393,14 +393,14 @@ def classifier_calibration_oracle_sql(n_bins: int = 10) -> str:
     """DuckDB twin of :func:`classifier_calibration` — plain global
     window formulation of the two-level rank (provably identical),
     same labels, same integer bin arithmetic, same decimal-sum mean."""
-    from ..oracles import TEXT_STATS_SQL
+    from ..oracles import TEXT_QUALITY_SQL
 
     qc = quality_classifier_oracle_sql().strip().replace(
         "ORDER BY doc_id", ""
     )
     return f"""
 WITH ts AS (
-{TEXT_STATS_SQL}
+{TEXT_QUALITY_SQL}
 ),
 qc AS (
 {qc}
@@ -448,14 +448,14 @@ def classifier_auc_oracle_sql() -> str:
     """DuckDB twin of :func:`classifier_auc_report` — composes the
     generated classifier oracle and the shared text-stats SQL as
     nested-WITH CTEs; identical integer half-unit rank algebra."""
-    from ..oracles import TEXT_STATS_SQL
+    from ..oracles import TEXT_QUALITY_SQL
 
     qc = quality_classifier_oracle_sql().strip().replace(
         "ORDER BY doc_id", ""
     )
     return f"""
 WITH ts AS (
-{TEXT_STATS_SQL}
+{TEXT_QUALITY_SQL}
 ),
 qc AS (
 {qc}

@@ -518,7 +518,7 @@ def simhash_signatures(documents: DataFrame, text_col: str = "text") -> DataFram
 
     md5 (not xxhash64) keeps the operator oracle-checkable: DuckDB
     computes the identical signature (hash-match gate, not rows-only);
-    see oracles.SIMHASH_SQL. Hash quality is equivalent for SimHash.
+    see oracles.DEDUP_SIMHASH_SQL. Hash quality is equivalent for SimHash.
     """
     cb = 20  # counter field width; 3 fields per long → 22 packed sums
     mask = (1 << cb) - 1
@@ -1491,7 +1491,7 @@ def repeated_span_stats_rolling(
     million distinct grams; the md5 tier stays registered as the
     oracle-anchored ground truth). Gated by the cross-tier
     bit-identity pytest at sf0.01/sf0.1 plus the shared
-    REPEATED_SPAN_SQL oracle.
+    REPEATED_SPANS_SQL oracle.
     """
     import numpy as np
     import pandas as pd

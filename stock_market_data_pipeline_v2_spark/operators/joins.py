@@ -56,20 +56,21 @@ def interval_left_join_range(
     """Literal J1 shape (range predicate) — reference parity form.
 
     Kept for genuinely unaligned right sides; prefer
-    :func:`interval_left_join` when buckets are tumbling-aligned.
+    :func:`interval_left_join` when buckets are tumbling-aligned. The
+    right side's keys are renamed first, so each key predicate compares
+    two distinct attributes even when both sides share one lineage.
     """
+    rhs = right.withColumnsRenamed({k: f"__right_{k}" for k in keys})
     cond = F.lit(True)
     for k in keys:
-        cond = cond & (left[k] == right[k])
+        cond = cond & (left[k] == rhs[f"__right_{k}"])
     cond = (
         cond
-        & (left[left_ts] >= right[right_start])
-        & (left[left_ts] < right[right_start] + F.expr(f"INTERVAL {interval}"))
+        & (left[left_ts] >= rhs[right_start])
+        & (left[left_ts] < rhs[right_start] + F.expr(f"INTERVAL {interval}"))
     )
-    joined = left.join(right, cond, "left")
-    for k in keys:
-        joined = joined.drop(right[k])
-    return joined.drop(right[right_start])
+    joined = left.join(rhs, cond, "left")
+    return joined.drop(*[f"__right_{k}" for k in keys]).drop(rhs[right_start])
 
 
 def as_of_join(

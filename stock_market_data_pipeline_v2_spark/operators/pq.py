@@ -264,7 +264,7 @@ def build_pq_index(
         F.expr(f"slice(uv, sub * {dsub} + 1, {dsub})").alias("sv"),
     )
 
-    def lloyd(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def lloyd(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         sub = int(key[0])
         pdf = pdf.sort_values("id")  # group arrival order is not deterministic
         x = np.stack([np.asarray(r, dtype=np.float64) for r in pdf["sv"]])
@@ -376,7 +376,7 @@ def pq_adc_topk(
     )
     fetch = max(1, refine * k)
 
-    def adc_block(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def adc_block(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         is_q = pdf["qv"].notna().to_numpy()
         ids = pdf["id"].to_numpy(dtype=np.int64)
         qids, cids = ids[is_q], ids[~is_q]
@@ -519,7 +519,7 @@ def ivfpq_adc_topk(
         )
     )
 
-    def adc_cell(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def adc_cell(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         is_q = pdf["qv"].notna().to_numpy()
         if not is_q.any() or is_q.all():
             return pd.DataFrame(

@@ -6,6 +6,9 @@ customer supplier part orders lineitem events documents embeddings).
 Column aliases match the Spark output exactly — the driver sorts
 columns by name before hashing values.
 
+Query ``<name>`` is gated by ``<NAME>_SQL`` here unless
+``__spark_entry__._oracle_overrides`` names another oracle for it.
+
 Shared CTE fragments keep the bar/returns/indicator lineage identical
 across queries (same trick as the reference's ephemeral dbt models,
 ``dbt_project.yml:31-32``: intermediates inline as CTEs).
@@ -484,7 +487,7 @@ FROM events
 """
 
 # operators/text.py oracles -------------------------------------------------
-TEXT_STATS_SQL = """
+TEXT_QUALITY_SQL = """
 WITH d AS (SELECT doc_id, lang, source, lower(trim(text)) AS t FROM documents),
 c AS (
     SELECT doc_id, lang, source,
@@ -905,7 +908,7 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o2
 ORDER BY c_custkey
 """
 
-QUALITY_DECILE_BINS_SQL = None  # set below: composes TEXT_STATS_SQL
+QUALITY_DECILE_BINS_SQL = None  # set below: composes TEXT_QUALITY_SQL
 
 # operators/upsert.py:snapshot_diff — the synthetic "new" snapshot
 # deletes key%11 rows, doubles totalprice on key%7, inserts key%13
@@ -978,8 +981,8 @@ from .operators.dedup import (  # noqa: E402
     minhash_lsh_oracle_sql as _minhash_lsh_oracle_sql,
 )
 
-MINHASH_LSH_SQL = _minhash_lsh_oracle_sql()
-INCREMENTAL_LSH_SQL = _incremental_lsh_oracle_sql()
+DEDUP_MINHASH_LSH_SQL = _minhash_lsh_oracle_sql()
+DEDUP_INCREMENTAL_LSH_SQL = _incremental_lsh_oracle_sql()
 
 # operators/similarity.py:hyperplane_lsh_topk (round 5): the plane
 # draws are data-independent xxhash64 constants (frozen in
@@ -1253,7 +1256,7 @@ GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
 
 # operators/dims.py:disjunctive_brand_revenue — Q19 shape:
 # OR-of-ANDs envelopes evaluated in ONE fact pass.
-DISJUNCTIVE_BRAND_SQL = """
+DISJUNCTIVE_BRAND_REVENUE_SQL = """
 SELECT p_brand, CAST(count(*) AS BIGINT) AS n_lines,
        round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
 FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
@@ -1322,7 +1325,7 @@ FROM r WHERE rank <= 5
 
 # operators/curation.py:shingle_novelty — share of each doc's word
 # 3-gram shingles first seen at that doc_id (min-doc ownership); the
-# shingle CTE is the NGRAM_JACCARD_SQL one verbatim (hash-exact
+# shingle CTE is the DEDUP_NGRAM_JACCARD_SQL one verbatim (hash-exact
 # precedent). Shingle-free docs kept with n_shingles=0, NULL share.
 SHINGLE_NOVELTY_SQL = """
 WITH toks AS (
@@ -1359,7 +1362,7 @@ FROM documents
 GROUP BY md5(lower(trim(text)))
 """
 
-NGRAM_JACCARD_SQL = """
+DEDUP_NGRAM_JACCARD_SQL = """
 WITH toks AS (
     SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w FROM documents
 ),
@@ -1392,7 +1395,7 @@ WHERE CAST(i AS DOUBLE) / (x.c + y.c - i) >= 0.5
 # frequency >= 2, per-doc interval union via the running-max window.
 # Matching on the gram STRING is equivalent to the engine's 16-byte
 # md5 key. pos is 0-based (i - 1) to match posexplode.
-REPEATED_SPAN_SQL = """
+REPEATED_SPANS_SQL = """
 WITH toks AS (
     SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w,
         CASE WHEN length(lower(trim(text))) > 0
@@ -1442,13 +1445,13 @@ ORDER BY t.doc_id
 """
 
 # operators/curation.py:cross_source_contamination — the pair CTE is
-# NGRAM_JACCARD_SQL verbatim (single source of truth: the Spark query
+# DEDUP_NGRAM_JACCARD_SQL verbatim (single source of truth: the Spark query
 # consumes the SAME pair graph _pair_graph builds from
 # shingle_jaccard_pairs), then symmetrize → enrich with sources →
 # count distinct contaminated docs per ordered source pair over the
 # full spine (zero rows explicit).
 CROSS_SOURCE_CONTAMINATION_SQL = f"""
-WITH pairs AS ({NGRAM_JACCARD_SQL}),
+WITH pairs AS ({DEDUP_NGRAM_JACCARD_SQL}),
 edges AS (
     SELECT doc_a AS x, doc_b AS y FROM pairs
     UNION ALL
@@ -1487,7 +1490,7 @@ ORDER BY s.source_a, s.source_b
 # operators/dedup.py:incremental_dedup_decisions — batch (doc_id % 10
 # = 0) admitted against corpus (the rest); df stop list on the CORPUS
 # shingles mirrors max_shingle_freq=1000; sizes unpruned.
-INCREMENTAL_DEDUP_SQL = """
+DEDUP_INCREMENTAL_SQL = """
 WITH batch  AS (SELECT * FROM documents WHERE doc_id % 10 = 0),
 corpus AS (SELECT * FROM documents WHERE doc_id % 10 <> 0),
 exact AS (
@@ -1543,7 +1546,7 @@ LEFT JOIN best  b ON bh.doc_id = b.batch_doc
 ORDER BY bh.doc_id
 """
 
-EMBEDDING_NEARDUP_SQL = """
+DEDUP_EMBEDDING_SQL = """
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        round(list_cosine_similarity(a.v, b.v), 6) AS cosine
@@ -1571,7 +1574,7 @@ _SIMHASH_CHUNKS = ",\n    ".join(
     + " AS c{k}".format(k=k)
     for k in range(4)
 )
-SIMHASH_SQL = f"""
+DEDUP_SIMHASH_SQL = f"""
 WITH words AS (
     SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
     FROM documents
@@ -1923,11 +1926,11 @@ REALTIME_SIGNALS_SQL = with_ctes(
     select="SELECT * FROM signals",
 )
 
-BOLLINGER_SQL = with_ctes(
+BOLLINGER_BANDS_SQL = with_ctes(
     EVENTS_TICKS, DAILY_BARS, CLEAN_BARS, BOLLINGER, select="SELECT * FROM bollinger"
 )
 
-STOCHASTIC_SQL = with_ctes(
+STOCHASTIC_K_SQL = with_ctes(
     EVENTS_TICKS, DAILY_BARS, CLEAN_BARS, STOCHASTIC, select="SELECT * FROM stochastic"
 )
 
@@ -2373,7 +2376,7 @@ DEDUP_KEEP_BEST_SQL = (
     "WITH cl AS ("
     + DEDUP_CLUSTERS_SQL.replace("ORDER BY doc_id", "")
     + "),\nts AS ("
-    + TEXT_STATS_SQL
+    + TEXT_QUALITY_SQL
     + """),
 allc AS (
     SELECT d.doc_id, coalesce(cl.cluster_id, d.doc_id) AS cluster_id
@@ -2520,7 +2523,7 @@ FROM r WHERE rank <= 50
 # hybrid_search_rrf oracle: the bm25 lexical list fused with the
 # exact semantic neighbor list of query vector 0 via reciprocal-rank
 # fusion — rational arithmetic on small ints, bit-exact.
-HYBRID_RRF_SQL = """
+HYBRID_SEARCH_RRF_SQL = """
 WITH toks AS (
     SELECT doc_id, unnest(regexp_extract_all(lower(trim(text)),
         '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS token
@@ -2579,7 +2582,7 @@ FROM f
 # integer bin arithmetic; composes the text_quality oracle so the
 # score expression is pinned by ONE definition.
 QUALITY_DECILE_BINS_SQL = (
-    "WITH ts AS (" + TEXT_STATS_SQL + "),\n"
+    "WITH ts AS (" + TEXT_QUALITY_SQL + "),\n"
     "r AS (SELECT doc_id, quality_score,\n"
     "  CAST(row_number() OVER (ORDER BY quality_score DESC, doc_id) AS BIGINT)"
     " AS quality_rank,\n"
@@ -2800,7 +2803,7 @@ FROM ticks t LEFT JOIN q USING (symbol)
 
 # operators/text.py:boilerplate_prefix_stats — cross-document shared
 # k-token prefix shares per source.
-BOILERPLATE_PREFIX_SQL = """
+BOILERPLATE_PREFIXES_SQL = """
 WITH base AS (
     SELECT doc_id, source,
         array_to_string(
@@ -2832,7 +2835,7 @@ FROM base b JOIN bp USING (source, prefix) JOIN bs USING (source)
 # are 1-indexed.
 # The hashing-trick embedding CTE chain (tk..n: token → signed bucket
 # → integer bucket sums → raw 64-vector + norm), shared by
-# HASH_EMBED_SQL and the frozen-weight quality-classifier oracle
+# HASH_EMBEDDINGS_SQL and the frozen-weight quality-classifier oracle
 # (operators/classifier.py) — single source for the md5/bucket/sign
 # algebra.
 HASH_EMBED_CTES = """tk AS (
@@ -2868,7 +2871,7 @@ n AS (
     FROM v
 )"""
 
-HASH_EMBED_SQL = f"""
+HASH_EMBEDDINGS_SQL = f"""
 WITH {HASH_EMBED_CTES}
 SELECT doc_id, CAST(p.pos AS INTEGER) AS pos,
        CASE WHEN nrm > 0 THEN round(raw[p.pos + 1] / nrm, 6)
@@ -3154,7 +3157,7 @@ FROM r WHERE sample_rank <= 100
 # --- round-5 TPC-H classic shapes over the available columns ---
 
 # operators/dims.py:banded_discount_revenue — Q6 shape, per ship year.
-BANDED_DISCOUNT_SQL = """
+BANDED_DISCOUNT_REVENUE_SQL = """
 SELECT CAST(year(l_shipdate) AS BIGINT) AS ship_year,
        CAST(count(*) AS BIGINT) AS n_lines,
        CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -3212,7 +3215,7 @@ GROUP BY 1, 2 ORDER BY 1, 2
 
 # operators/dims.py:customer_order_distribution — Q13 shape
 # (zero-order customers included via the left join).
-CUSTOMER_ORDER_DIST_SQL = """
+CUSTOMER_ORDER_DISTRIBUTION_SQL = """
 WITH per_cust AS (
     SELECT o_custkey, CAST(count(*) AS BIGINT) AS n
     FROM orders WHERE o_orderpriority <> '1-URGENT'
@@ -3283,7 +3286,7 @@ FROM r WHERE rank <= 5
 
 # operators/dedup.py:ngram_decontaminate — GPT-3-style exact 13-gram
 # decontamination; reference = doc_id % 10 = 0 (entry split), corpus
-# = the rest. Same interval-union algebra as REPEATED_SPAN_SQL.
+# = the rest. Same interval-union algebra as REPEATED_SPANS_SQL.
 NGRAM_DECONTAMINATE_SQL = """
 WITH corpus AS (SELECT * FROM documents WHERE doc_id % 10 <> 0),
 ref    AS (SELECT * FROM documents WHERE doc_id % 10 = 0),
@@ -3523,10 +3526,10 @@ ORDER BY stage_idx
 
 # operators/dedup.py:jaccard_prefix_filter_pairs — prefix filtering
 # is LOSSLESS (ppjoin lemma), so its oracle is the UNCAPPED exact
-# all-pairs join: same shingle CTE as NGRAM_JACCARD_SQL, no df-cap
+# all-pairs join: same shingle CTE as DEDUP_NGRAM_JACCARD_SQL, no df-cap
 # QUALIFY. The prefix machinery exists only on the engine side —
 # the whole point is that it cannot change the answer.
-PREFIX_JACCARD_SQL = """
+DEDUP_PREFIX_FILTER_SQL = """
 WITH toks AS (
     SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w FROM documents
 ),

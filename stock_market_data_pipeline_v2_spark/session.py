@@ -74,6 +74,21 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` for a session built here:
+    ``SPARK_DRIVER_MEMORY`` if set, else half the host's ``MemTotal``
+    rounded down to whole GiB, between 1g and 16g. A fixed 16g heap
+    outgrows a 15 GB host under a local[32] sf0.1 sweep."""
+    if "SPARK_DRIVER_MEMORY" in os.environ:
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    try:
+        with open(meminfo) as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except OSError:  # no procfs: the cap
+        kb = 32 << 20
+    return f"{max(1, min(16, kb // (2 << 20)))}g"
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -91,7 +106,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # saveAsTable (S10) target — static conf, keep it off the repo tree

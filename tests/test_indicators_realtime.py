@@ -155,3 +155,32 @@ def test_oversold_and_high_volume_branches(spark):
     assert out[-1].is_high_volume_day is True
     assert out[-1].ma_signal_5_20 == "DEATH_CROSS"
     assert out[-1].pct_of_52w_range is not None and out[-1].pct_of_52w_range <= 5.0
+
+
+def test_range_join_keys_are_two_attributes(spark):
+    """``interval_left_join_range`` over two frames of one lineage: the
+    analysed key predicate compares two distinct ``symbol`` attributes
+    (the left one kept in the output), and an unmatched left row keeps
+    its own key instead of the right side's null."""
+    import re
+
+    from stock_market_data_pipeline_v2_spark.operators.joins import (
+        interval_left_join_range,
+    )
+
+    base = spark.createDataFrame(
+        [("A", "2024-01-01 00:15:00", 1.0), ("B", "2024-01-01 03:15:00", 2.0)],
+        "symbol string, ts string, p double",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    left = base.select("symbol", F.col("ts").alias("window_start"), "p")
+    right = base.filter(F.col("symbol") == "A").select(
+        "symbol", F.date_trunc("hour", "ts").alias("window_start_1h")
+    )
+    out = interval_left_join_range(
+        left, right, ["symbol"], "window_start", "window_start_1h"
+    )
+    plan = out._jdf.queryExecution().analyzed().toString()
+    (lhs, rhs), = re.findall(r"\((symbol#\d+) = (\w*symbol#\d+)\)", plan)
+    left_symbol = left._jdf.queryExecution().analyzed().output().apply(0).toString()
+    assert lhs == left_symbol and rhs != lhs
+    assert sorted(r.symbol for r in out.collect()) == ["A", "B"]

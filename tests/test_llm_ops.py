@@ -8,6 +8,7 @@ decode-kernel determinism, and hand-computed goldens.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -643,8 +644,6 @@ def test_dedup_clusters_star_long_chain(spark):
     default budget (documented contract, not silent wrong labels);
     the star algorithm converges in O(log) rounds and labels the
     whole chain with its minimum."""
-    import pytest
-
     from stock_market_data_pipeline_v2_spark.operators.dedup import (
         dedup_clusters,
         dedup_clusters_star,
@@ -828,6 +827,7 @@ def test_winnow_guarantee_and_density(spark):
     assert (1, 2) in got and not any(3 in p for p in got)
 
 
+@pytest.mark.filterwarnings("error:Cannot infer the eval type")
 def test_pq_adc_recall_subset_and_determinism(spark):
     """PQ/ADC tier gates: (a) recall ≥ 0.6 vs brute top-k at the
     defaults; (b) precision — every emitted (query, neighbor, cosine)
@@ -935,6 +935,7 @@ def test_prototypicality_prune_contract(spark):
     idx.release()
 
 
+@pytest.mark.filterwarnings("error:Cannot infer the eval type")
 def test_ivfpq_recall_and_pool_precision(spark):
     """IVF-PQ composition gates: recall ≥ 0.6 vs brute; every
     emission in the deep brute pool with the identical exact cosine;

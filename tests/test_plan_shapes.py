@@ -62,12 +62,14 @@ def registered_query_plans(spark):
 
 
 def _plan(df) -> str:
-    jqe = df._jdf.queryExecution()
-    return jqe.explainString(
-        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "extended"
-        )
+    """The ``== Physical Plan ==`` section Spark plans for ``df`` before
+    execution. Explaining an executed frame itself would print AQE's
+    final plan beside the initial one and count each operator twice."""
+    execution = df.sparkSession._jvm.org.apache.spark.sql.execution
+    jqe = df.sparkSession._jsparkSession.sessionState().executePlan(
+        df._jdf.queryExecution().logical(), execution.CommandExecutionMode.ALL()
     )
+    return jqe.explainString(execution.ExplainMode.fromString("simple"))
 
 
 def test_pricing_summary_pushdown_and_pruning(spark):

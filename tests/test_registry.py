@@ -1,6 +1,7 @@
 """The query registry: ``_QUERY_ORDER`` plus the module's ``q_<name>``
 functions, each served behind ``configure_runtime`` with its table
-parameters resolved; and the one memo, ``sources.io.memo``."""
+parameters resolved; the oracles and the bench headline derived from
+it; and the one memo, ``sources.io.memo``."""
 
 from __future__ import annotations
 
@@ -50,3 +51,34 @@ def test_one_module_level_memo():
     ]
     assert memos == [(io.__name__, "_MEMO")]
 
+
+def test_every_query_but_the_rows_only_ones_has_an_oracle():
+    import __spark_entry__ as m
+
+    assert set(m.queries()) - set(m.oracle_sql()) == set(m._ROWS_ONLY)
+
+
+def test_oracle_overrides_only_where_the_convention_does_not_reach():
+    """An override names a registered, oracle-gated query whose oracle
+    is not ``oracles.<NAME>_SQL``; otherwise the convention serves it."""
+    import __spark_entry__ as m
+    from stock_market_data_pipeline_v2_spark import oracles
+
+    overrides = m._oracle_overrides()
+    assert set(overrides) <= set(m.queries()) - set(m._ROWS_ONLY)
+    redundant = [
+        n
+        for n, sql in overrides.items()
+        if getattr(oracles, f"{n.upper()}_SQL", None) == sql
+    ]
+    assert not redundant
+
+
+def test_bench_headline_is_the_registry_minus_not_headline():
+    import bench
+
+    import __spark_entry__ as m
+
+    qs = m.queries()
+    assert set(bench.NOT_HEADLINE) <= set(qs)
+    assert len([n for n in qs if n not in bench.NOT_HEADLINE]) == 189

@@ -20,7 +20,6 @@ Usage: python tools/hostile_sweep.py [--sf DIR] [query ...]
 from __future__ import annotations
 
 import argparse
-import os
 import sys
 from pathlib import Path
 
@@ -42,6 +41,8 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from stock_market_data_pipeline_v2_spark.session import driver_memory
+
     # Build the hostile session FIRST: every later getOrCreate()
     # (including the engine's own session factory) returns THIS
     # session with THESE confs — exactly how the driver hands us one.
@@ -50,7 +51,7 @@ def main() -> int:
         .appName("hostile-sweep")
         .config("spark.sql.shuffle.partitions", args.partitions)
         .config("spark.sql.session.timeZone", args.tz)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

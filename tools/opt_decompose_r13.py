@@ -4,7 +4,7 @@ r12 "Next round" #3/#7): per row, BUILD = query-function call (driver
 py4j plan construction), EXEC = noop materialization, best-of-N warm.
 The r12 tool took a hand-picked list; the round-13 lever is the ~120-
 row long tail whose per-row 0.2-0.7 s build constant the driver's
-scaling block exposed (ratios ≈ 1), so this sweeps the whole HEADLINE
+scaling block exposed (ratios ≈ 1), so this sweeps the whole headline
 list and prints rows sorted by build desc.
 
 Usage: python tools/opt_decompose_r13.py [--sf DIR] [--runs 2] [name ...]
@@ -39,7 +39,7 @@ def main() -> None:
 
     spark = get_spark("opt-decompose-r13")
     qs = m.queries()
-    names = args.names or [n for n in bench.HEADLINE if n in qs]
+    names = args.names or [n for n in qs if n not in bench.NOT_HEADLINE]
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     print(f"# loadavg {os.getloadavg()}")
