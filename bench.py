@@ -73,14 +73,21 @@ def main() -> None:
     # documents the discount rule: discount any cross-round comparison
     # whose loadavg_start[0] exceeds ~2× the CPU count.
     la_start = [round(x, 2) for x in os.getloadavg()]
+    # Which codegen cache state each row hit: the classes its second run
+    # still compiled (Janino compilations, one per cache miss). Nonzero
+    # means the row's working set outgrew session.get_spark's cache cap.
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     timings: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     for name in names:
         best = float("inf")
         for _ in range(2):
+            c0 = codegen.METRIC_COMPILATION_TIME().getCount()
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
+            compiles[name] = codegen.METRIC_COMPILATION_TIME().getCount() - c0
             release_cached_inputs(df)
         timings[name] = round(best, 3)
 
@@ -106,7 +113,7 @@ def main() -> None:
     # record makes each run's code state citable directly.
     short = _short_keys(list(timings))
     Path(__file__).resolve().parent.joinpath("BENCH_driver.out").write_text(
-        json.dumps({**full, "key_map": short}, indent=1) + "\n"
+        json.dumps({**full, "codegen_compiles": compiles, "key_map": short}, indent=1) + "\n"
     )
     # Human/log line first (may be cut from the tail; that's fine)...
     print(json.dumps(full))

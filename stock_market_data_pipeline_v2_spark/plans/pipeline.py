@@ -55,9 +55,14 @@ def run_batch_pipeline(
     bars = filter_clean_bars(bars_from_events(events))
 
     silver_path = f"{out_root}/silver/daily_bars"
+    # Read the zone with the schema in hand (no footer-reading job); a
+    # partitioned zone reads its partition column last.
+    silver_schema = StructType(
+        [f for f in bars.schema if f.name != "symbol"] + [bars.schema["symbol"]]
+    )
     if incremental:
         try:
-            existing = spark.read.parquet(silver_path)
+            existing = spark.read.schema(silver_schema).parquet(silver_path)
         except Exception:  # noqa: BLE001 — first run, zone absent
             existing = None
         if existing is not None:
@@ -80,11 +85,7 @@ def run_batch_pipeline(
             write_parquet(bars, silver_path, mode="overwrite", partition_cols=["symbol"])
     else:
         write_parquet(bars, silver_path, mode="overwrite", partition_cols=["symbol"])
-    # Read back with the schema in hand (no schema-inference job); a
-    # partitioned zone reads its partition column last.
-    silver = spark.read.schema(
-        StructType([f for f in bars.schema if f.name != "symbol"] + [bars.schema["symbol"]])
-    ).parquet(silver_path)
+    silver = spark.read.schema(silver_schema).parquet(silver_path)
 
     report = validate(
         silver, daily_bars_checks(), unique_keys=[["symbol", "trade_date"]]

@@ -95,6 +95,23 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """A session with this engine's settings; ``extra_conf`` overrides any.
+
+    ``spark.sql.codegen.cache.maxEntries`` (Spark's compiled-class
+    cache, default 100) is 256 here. It is a static SQL conf, read once
+    per JVM when the first plan is compiled, so it is set on the builder:
+    ``configure_runtime`` cannot set it (``spark.conf.set`` raises on a
+    static conf), and a session the driver built keeps Spark's default.
+    The working sets it must hold, counted as compilations
+    (``CodegenMetrics.METRIC_COMPILATION_TIME``) over warm passes of
+    ``perfbench/``'s workloads: 162 distinct classes for the seven mart
+    reads, 125 for the batch refresh plus tick ingest. At the default
+    the LRU evicted most of either set every pass, so each warm mart
+    pass recompiled 112-139 classes (about 12 ms each) and each pipeline
+    cycle 112; at 256 both recompile none. 256 is over 1.5x the larger
+    set because Guava's segmented cache evicts before its nominal size;
+    a larger cap would only keep more of a long suite's classes loaded.
+    """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     builder = (
@@ -109,6 +126,7 @@ def get_spark(
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "256")
         # saveAsTable (S10) target — static conf, keep it off the repo tree
         .config(
             "spark.sql.warehouse.dir",

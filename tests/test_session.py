@@ -1,4 +1,4 @@
-"""The session factory's host-derived defaults."""
+"""The session factory's host-derived defaults and its codegen cache."""
 
 from __future__ import annotations
 
@@ -30,3 +30,35 @@ def test_driver_heap_from_the_environment_wins(tmp_path, monkeypatch):
     meminfo = tmp_path / "meminfo"
     meminfo.write_text("MemTotal:       67108864 kB\n")
     assert driver_memory(str(meminfo)) == "3g"
+
+
+# The seven reads of perfbench's mart_query workload.
+MART_KINDS = (
+    "stock_performance", "daily_summary", "realtime_signals",
+    "rolling_indicators", "bollinger_bands", "macd", "daily_vwap",
+)
+
+
+def test_warm_mart_reads_compile_nothing(spark):
+    """A warm pass over the mart reads reuses every compiled class.
+
+    Their working set is larger than Spark's default codegen cache (100
+    classes), whose LRU then evicts and recompiles most of it on every
+    pass; ``get_spark`` sizes the cache to hold it. A failure here means
+    the working set outgrew the cap."""
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles_in_one_pass() -> int:
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        for kind in MART_KINDS:
+            qs[kind](spark, "/root/testdata/sf0.01").write.format("noop").mode(
+                "overwrite"
+            ).save()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    compiles_in_one_pass()
+    compiles_in_one_pass()
+    assert compiles_in_one_pass() == 0
