@@ -208,70 +208,58 @@ from stock_market_data_pipeline_v2_spark.operators.dedup import (
 SF0001 = "/root/testdata/sf0.001"
 
 
-def _clean_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memo(
-        spark,
-        sf_dir,
-        "clean_bars",
-        lambda: filter_clean_bars(bars_from_events(load_table(spark, sf_dir, "events"))),
-    )
+# Derived inputs: the memoized intermediates between the testdata tables
+# and the queries. ``d_<name>`` builds the memo entry ``name``; its
+# parameters name its own inputs (tables or other derived inputs), and a
+# builder that names ``name`` is passed ``memo(spark, sf_dir, name, ...)``
+# (``_configured``). The lazy plans are the shared cleaning chains (about
+# 0.2-0.7 s of plan construction each); the indexes and graphs are built
+# state, paid once per session.
 
 
-def _returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The daily-returns chain is rebuilt by 13 registered queries
-    # (returns/moments/outliers/beta/sharpe/ranks/correlations/
-    # similarity/pattern families) at a measured ~0.2 s of eager
-    # re-analysis per call.
-    return memo(
-        spark, sf_dir, "daily_returns", lambda: daily_returns(_clean_bars(spark, sf_dir))
-    )
+def d_clean_bars(events: DataFrame) -> DataFrame:
+    return filter_clean_bars(bars_from_events(events))
 
 
-def _rolling_ind(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The indicator chain — consumed by q_rolling_indicators AND the
-    # performance mart below (~0.55 s of eager plan analysis per
-    # rebuild).
-    return memo(
-        spark,
-        sf_dir,
-        "rolling_indicators",
-        lambda: rolling_indicators(_returns(spark, sf_dir)),
-    )
+def d_daily_returns(clean_bars: DataFrame) -> DataFrame:
+    # rebuilt by 13 registered queries (returns/moments/outliers/beta/
+    # sharpe/ranks/correlations/similarity/pattern families) at a
+    # measured ~0.2 s of eager re-analysis per call
+    return daily_returns(clean_bars)
 
 
-def _perf_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The full stock-performance mart (returns -> rolling indicators
-    # -> signal projection, ~0.7 s of plan build), feeding
-    # q_stock_performance and q_daily_summary; the enriched frame
-    # rides the memo above.
-    return memo(
-        spark,
-        sf_dir,
-        "stock_performance",
-        lambda: stock_performance(
-            _clean_bars(spark, sf_dir), enriched=_rolling_ind(spark, sf_dir)
-        ),
-    )
+def d_rolling_indicators(daily_returns: DataFrame) -> DataFrame:
+    # consumed by q_rolling_indicators AND the performance mart below
+    # (~0.55 s of eager plan analysis per rebuild)
+    return rolling_indicators(daily_returns)
 
 
-def q_daily_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _clean_bars(spark, sf_dir)
+def d_stock_performance(
+    clean_bars: DataFrame, rolling_indicators: DataFrame
+) -> DataFrame:
+    # returns -> rolling indicators -> signal projection (~0.7 s of plan
+    # build), feeding q_stock_performance and q_daily_summary
+    return stock_performance(clean_bars, enriched=rolling_indicators)
 
 
-def q_daily_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _returns(spark, sf_dir)
+def q_daily_bars(clean_bars: DataFrame) -> DataFrame:
+    return clean_bars
 
 
-def q_rolling_indicators(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _rolling_ind(spark, sf_dir)
+def q_daily_returns(daily_returns: DataFrame) -> DataFrame:
+    return daily_returns
 
 
-def q_stock_performance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _perf_mart(spark, sf_dir)
+def q_rolling_indicators(rolling_indicators: DataFrame) -> DataFrame:
+    return rolling_indicators
 
 
-def q_daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return daily_summary(_perf_mart(spark, sf_dir))
+def q_stock_performance(stock_performance: DataFrame) -> DataFrame:
+    return stock_performance
+
+
+def q_daily_summary(stock_performance: DataFrame) -> DataFrame:
+    return daily_summary(stock_performance)
 
 
 def q_regional_customer_summary(
@@ -701,7 +689,7 @@ def _materialize_and_release(df: DataFrame) -> DataFrame:
     every later collect, so nothing recomputes; only rollup-sized
     outputs (≤ dozens of rows) should come through here per call.
     Larger state comes through once, as a memoized index
-    (``_pair_graph``)."""
+    (``d_pair_graph``)."""
     out = df.localCheckpoint()
     from stock_market_data_pipeline_v2_spark.operators.dedup import (
         release_cached_inputs,
@@ -1036,8 +1024,8 @@ def q_boilerplate_prefixes(documents: DataFrame) -> DataFrame:
     return boilerplate_prefix_stats(documents, k=5, threshold=0.2)
 
 
-def q_winsorize_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return winsorize_ticks(_ticks(spark, sf_dir))
+def q_winsorize_ticks(ticks: DataFrame) -> DataFrame:
+    return winsorize_ticks(ticks)
 
 
 def q_lm_perplexity(documents: DataFrame) -> DataFrame:
@@ -1093,24 +1081,16 @@ def q_stratified_sample(documents: DataFrame) -> DataFrame:
 # the corpus (it is exactly what dedup_ngram_jaccard emits and what
 # the admission stream appends to), so the split query measures split
 # logic against a built graph, not a per-call graph rebuild.
-def _pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memo(
-        spark,
-        sf_dir,
-        "pair_graph",
-        lambda: _materialize_and_release(
-            shingle_jaccard_pairs(
-                load_table(spark, sf_dir, "documents"), n=3, threshold=0.5,
-                max_shingle_freq=_SHINGLE_DF_CAP,
-            )
-        ),
+def d_pair_graph(documents: DataFrame) -> DataFrame:
+    return _materialize_and_release(
+        shingle_jaccard_pairs(
+            documents, n=3, threshold=0.5, max_shingle_freq=_SHINGLE_DF_CAP
+        )
     )
 
 
-def q_leakage_safe_split(
-    spark: SparkSession, sf_dir: str, documents: DataFrame
-) -> DataFrame:
-    return leakage_safe_split(documents, _pair_graph(spark, sf_dir), val_fraction=0.1)
+def q_leakage_safe_split(documents: DataFrame, pair_graph: DataFrame) -> DataFrame:
+    return leakage_safe_split(documents, pair_graph, val_fraction=0.1)
 
 
 def q_importance_weights(documents: DataFrame) -> DataFrame:
@@ -1272,12 +1252,12 @@ def q_bpe_token_counts(documents: DataFrame) -> DataFrame:
     return bpe_token_counts(documents, FIXED_MERGES)
 
 
-def q_walk_forward_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return walk_forward_splits(_clean_bars(spark, sf_dir))
+def q_walk_forward_splits(clean_bars: DataFrame) -> DataFrame:
+    return walk_forward_splits(clean_bars)
 
 
-def q_market_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return market_beta(_returns(spark, sf_dir))
+def q_market_beta(daily_returns: DataFrame) -> DataFrame:
+    return market_beta(daily_returns)
 
 
 def q_event_transitions(events: DataFrame) -> DataFrame:
@@ -1285,24 +1265,24 @@ def q_event_transitions(events: DataFrame) -> DataFrame:
     return event_transitions(events)
 
 
-def q_return_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_return_moments(daily_returns: DataFrame) -> DataFrame:
     # round 6: skewness/excess-kurtosis mart via exact integer power
     # sums (int128-class) + engine-shared formula strings.
     from stock_market_data_pipeline_v2_spark.operators.stats import (
         moment_stats,
     )
 
-    return moment_stats(_returns(spark, sf_dir))
+    return moment_stats(daily_returns)
 
 
-def q_return_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_return_outliers(daily_returns: DataFrame) -> DataFrame:
     # round 6: robust MAD outlier days (median/MAD have a 50%%
     # breakdown point where z-scores drag with the outliers).
     from stock_market_data_pipeline_v2_spark.operators.stats import (
         return_outliers,
     )
 
-    return return_outliers(_returns(spark, sf_dir), k=5.0)
+    return return_outliers(daily_returns, k=5.0)
 
 
 def q_event_value_quantiles(events: DataFrame) -> DataFrame:
@@ -1320,10 +1300,8 @@ def q_dedup_incremental_lsh(documents: DataFrame) -> DataFrame:
     )
 
 
-def q_dedup_keep_best(
-    spark: SparkSession, sf_dir: str, documents: DataFrame
-) -> DataFrame:
-    return dedup_keep_best(documents, _pair_graph(spark, sf_dir))
+def q_dedup_keep_best(documents: DataFrame, pair_graph: DataFrame) -> DataFrame:
+    return dedup_keep_best(documents, pair_graph)
 
 
 def q_dedup_incremental(documents: DataFrame) -> DataFrame:
@@ -1385,15 +1363,15 @@ def q_dedup_sorted_neighborhood(documents: DataFrame) -> DataFrame:
     return dedup_sorted_neighborhood(documents, window_size=10, n=3, threshold=0.5)
 
 
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_dedup_clusters(pair_graph: DataFrame) -> DataFrame:
     # CC operators take the pair graph as input by contract — the
-    # entries consume the shared per-session graph (_pair_graph; the
+    # entries consume the shared per-session graph (pair_graph; the
     # graph build stays fully timed under dedup_ngram_jaccard)
-    return dedup_clusters(_pair_graph(spark, sf_dir))
+    return dedup_clusters(pair_graph)
 
 
-def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup_clusters_star(_pair_graph(spark, sf_dir))
+def q_dedup_clusters_star(pair_graph: DataFrame) -> DataFrame:
+    return dedup_clusters_star(pair_graph)
 
 
 def q_dedup_minhash_lsh(documents: DataFrame) -> DataFrame:
@@ -1420,37 +1398,23 @@ def q_dedup_embedding(embeddings: DataFrame) -> DataFrame:
 # multi-assignment) — build-once/query-many is the point of an index
 # (VERDICT r2 #1). Deterministic: seeded k-means over a deterministic
 # partitioning, so a rebuild in any session yields the identical index.
-def _ivf_index(spark: SparkSession, sf_dir: str) -> IvfIndex:
-    return memo(
-        spark,
-        sf_dir,
-        "ivf_index",
-        lambda: build_ivf_index(
-            load_table(spark, sf_dir, "embeddings"), n_assign=3, persist=True
-        ),
-    )
+def d_ivf_index(embeddings: DataFrame) -> IvfIndex:
+    return build_ivf_index(embeddings, n_assign=3, persist=True)
 
 
 # PQ index: same build-once/query-many contract as the IVF index.
-def _pq_index(spark: SparkSession, sf_dir: str) -> PqIndex:
-    return memo(
-        spark,
-        sf_dir,
-        "pq_index",
-        lambda: build_pq_index(load_table(spark, sf_dir, "embeddings"), persist=True),
-    )
+def d_pq_index(embeddings: DataFrame) -> PqIndex:
+    return build_pq_index(embeddings, persist=True)
 
 
-def q_prototypicality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return prototypicality_prune(_ivf_index(spark, sf_dir), keep_fraction=0.7)
+def q_prototypicality_prune(ivf_index: IvfIndex) -> DataFrame:
+    return prototypicality_prune(ivf_index, keep_fraction=0.7)
 
 
 ANN_EXTEND_ID_OFFSET = 10_000_000
 
 
-def q_ann_index_extend(
-    spark: SparkSession, sf_dir: str, embeddings: DataFrame
-) -> DataFrame:
+def q_ann_index_extend(embeddings: DataFrame, ivf_index: IvfIndex) -> DataFrame:
     # round 8: the incremental ADD path (FAISS add(), similarity.py:
     # extend_ivf_index) made driver-visible — a "new" batch (1-in-4
     # of the corpus under offset ids) assigned against the FROZEN
@@ -1469,7 +1433,7 @@ def q_ann_index_extend(
             "vec_id", F.col("vec_id") + F.lit(ANN_EXTEND_ID_OFFSET)
         )
     )
-    extended = extend_ivf_index(_ivf_index(spark, sf_dir), batch)
+    extended = extend_ivf_index(ivf_index, batch)
     return (
         extended.assignments.filter(
             F.col("id") >= F.lit(ANN_EXTEND_ID_OFFSET)
@@ -1487,9 +1451,7 @@ def q_ann_index_extend(
     )
 
 
-def q_pq_index_extend(
-    spark: SparkSession, sf_dir: str, embeddings: DataFrame
-) -> DataFrame:
+def q_pq_index_extend(embeddings: DataFrame, pq_index: PqIndex) -> DataFrame:
     # round 8: the PQ twin of ann_index_extend — a "new" batch encoded
     # against the FROZEN codebooks (pq.py:extend_pq_index, the FAISS
     # add() path), emitted as (vec_id, sub, code) rows. The oracle
@@ -1505,7 +1467,7 @@ def q_pq_index_extend(
             "vec_id", F.col("vec_id") + F.lit(ANN_EXTEND_ID_OFFSET)
         )
     )
-    extended = extend_pq_index(_pq_index(spark, sf_dir), batch)
+    extended = extend_pq_index(pq_index, batch)
     return (
         extended.codes.filter(F.col("id") >= F.lit(ANN_EXTEND_ID_OFFSET))
         .select(
@@ -1517,9 +1479,7 @@ def q_pq_index_extend(
     )
 
 
-def q_pq_subspace_profile(
-    spark: SparkSession, sf_dir: str, embeddings: DataFrame
-) -> DataFrame:
+def q_pq_subspace_profile(embeddings: DataFrame, pq_index: PqIndex) -> DataFrame:
     # round 8: the PQ twin of ivf_cluster_profile — per-subspace code
     # utilization, assignment skew, and BIGINT-quantized quantization
     # error off the persisted codes table. Frozen-state oracle.
@@ -1527,10 +1487,10 @@ def q_pq_subspace_profile(
         pq_subspace_profile,
     )
 
-    return pq_subspace_profile(_pq_index(spark, sf_dir), embeddings)
+    return pq_subspace_profile(pq_index, embeddings)
 
 
-def q_ivf_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_ivf_cluster_profile(ivf_index: IvfIndex) -> DataFrame:
     # round 8 (VERDICT r7 #4): index-health report off the shared IVF
     # memo — per-cell size, integer-quantized inertia, centroid norm.
     # Three tiers consume this index; this audits it (what a
@@ -1539,33 +1499,27 @@ def q_ivf_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_cluster_profile,
     )
 
-    return ivf_cluster_profile(_ivf_index(spark, sf_dir))
+    return ivf_cluster_profile(ivf_index)
 
 
-def q_ann_pq_topk(spark: SparkSession, sf_dir: str, embeddings: DataFrame) -> DataFrame:
-    return pq_adc_topk(
-        embeddings, _ann_queries(embeddings), k=5, index=_pq_index(spark, sf_dir)
-    )
+def q_ann_pq_topk(embeddings: DataFrame, pq_index: PqIndex) -> DataFrame:
+    return pq_adc_topk(embeddings, _ann_queries(embeddings), k=5, index=pq_index)
 
 
 def q_ann_ivfpq_topk(
-    spark: SparkSession, sf_dir: str, embeddings: DataFrame
+    embeddings: DataFrame, ivf_index: IvfIndex, pq_index: PqIndex
 ) -> DataFrame:
     return ivfpq_adc_topk(
         embeddings,
         _ann_queries(embeddings),
         k=5,
-        ivf_index=_ivf_index(spark, sf_dir),
-        pq_index=_pq_index(spark, sf_dir),
+        ivf_index=ivf_index,
+        pq_index=pq_index,
     )
 
 
-def q_dedup_embedding_ivf(
-    spark: SparkSession, sf_dir: str, embeddings: DataFrame
-) -> DataFrame:
-    return embedding_neardup_pairs_ivf(
-        embeddings, threshold=0.4, index=_ivf_index(spark, sf_dir)
-    )
+def q_dedup_embedding_ivf(embeddings: DataFrame, ivf_index: IvfIndex) -> DataFrame:
+    return embedding_neardup_pairs_ivf(embeddings, threshold=0.4, index=ivf_index)
 
 
 def _ann_queries(embeddings: DataFrame) -> DataFrame:
@@ -1593,12 +1547,8 @@ def q_ann_lsh_topk(embeddings: DataFrame) -> DataFrame:
     return hyperplane_lsh_topk(embeddings, _ann_queries(embeddings), k=5)
 
 
-def q_ann_ivf_topk(
-    spark: SparkSession, sf_dir: str, embeddings: DataFrame
-) -> DataFrame:
-    return ivf_topk(
-        None, _ann_queries(embeddings), k=5, index=_ivf_index(spark, sf_dir)
-    )
+def q_ann_ivf_topk(embeddings: DataFrame, ivf_index: IvfIndex) -> DataFrame:
+    return ivf_topk(None, _ann_queries(embeddings), k=5, index=ivf_index)
 
 
 # query-term set mirrored in oracles.BM25_TOPK_SQL / HYBRID_SEARCH_RRF_SQL
@@ -1618,9 +1568,9 @@ def q_shingle_novelty(documents: DataFrame) -> DataFrame:
 
 
 def q_cross_source_contamination(
-    spark: SparkSession, sf_dir: str, documents: DataFrame
+    documents: DataFrame, pair_graph: DataFrame
 ) -> DataFrame:
-    return cross_source_contamination(documents, _pair_graph(spark, sf_dir))
+    return cross_source_contamination(documents, pair_graph)
 
 
 def q_hybrid_search_rrf(embeddings: DataFrame, documents: DataFrame) -> DataFrame:
@@ -1641,7 +1591,7 @@ def _similarity_sq8(embs: DataFrame, qs: DataFrame) -> DataFrame:
 
 
 def q_ann_recall_report(
-    spark: SparkSession, sf_dir: str, embeddings: DataFrame
+    embeddings: DataFrame, ivf_index: IvfIndex, pq_index: PqIndex
 ) -> DataFrame:
     """Recall@5 of every approximate ANN tier against the brute
     ground truth, as a REGISTERED oracle-gated query (round 5): the
@@ -1657,16 +1607,16 @@ def q_ann_recall_report(
     # registered ann_cosine_topk rows' implementation since r12).
     exact = cosine_topk_blas(embeddings, qs, k=5).select("query_id", "neighbor_id")
     tiers = {
-        "ivf": ivf_topk(None, qs, k=5, index=_ivf_index(spark, sf_dir)),
+        "ivf": ivf_topk(None, qs, k=5, index=ivf_index),
         "ivfpq": ivfpq_adc_topk(
             embeddings,
             qs,
             k=5,
-            ivf_index=_ivf_index(spark, sf_dir),
-            pq_index=_pq_index(spark, sf_dir),
+            ivf_index=ivf_index,
+            pq_index=pq_index,
         ),
         "lsh": hyperplane_lsh_topk(embeddings, qs, k=5),
-        "pq": pq_adc_topk(embeddings, qs, k=5, index=_pq_index(spark, sf_dir)),
+        "pq": pq_adc_topk(embeddings, qs, k=5, index=pq_index),
         # round 9: the SQ8 tier joins the report the round it lands
         "sq8": _similarity_sq8(embeddings, qs),
     }
@@ -1695,18 +1645,14 @@ def q_ann_recall_report(
     return out.orderBy("tier")
 
 
-def q_similar_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_similar_symbols(daily_returns: DataFrame) -> DataFrame:
     # per-symbol top-k most-correlated peers off the shared return mart
-    return similar_symbols_topk(
-        _returns(spark, sf_dir), k=3
-    )
+    return similar_symbols_topk(daily_returns, k=3)
 
 
-def q_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_pattern_match(daily_returns: DataFrame) -> DataFrame:
     # z-normalized subsequence matching over the shared return mart
-    return pattern_match_topk(
-        _returns(spark, sf_dir), k=25, window=20
-    )
+    return pattern_match_topk(daily_returns, k=25, window=20)
 
 
 def q_cohort_retention(events: DataFrame) -> DataFrame:
@@ -1743,40 +1689,40 @@ def q_session_windows(events: DataFrame) -> DataFrame:
     return session_window_aggregate(events)
 
 
-def q_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bollinger_bands(_clean_bars(spark, sf_dir))
+def q_bollinger_bands(clean_bars: DataFrame) -> DataFrame:
+    return bollinger_bands(clean_bars)
 
 
-def q_stochastic_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return stochastic_k(_clean_bars(spark, sf_dir))
+def q_stochastic_k(clean_bars: DataFrame) -> DataFrame:
+    return stochastic_k(clean_bars)
 
 
-def q_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return macd(_clean_bars(spark, sf_dir))
+def q_macd(clean_bars: DataFrame) -> DataFrame:
+    return macd(clean_bars)
 
 
-def q_atr_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return atr_obv(_clean_bars(spark, sf_dir))
+def q_atr_obv(clean_bars: DataFrame) -> DataFrame:
+    return atr_obv(clean_bars)
 
 
-def q_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return drawdown(_clean_bars(spark, sf_dir))
+def q_drawdown(clean_bars: DataFrame) -> DataFrame:
+    return drawdown(clean_bars)
 
 
-def q_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return rolling_beta(_returns(spark, sf_dir), n=10)
+def q_rolling_beta(daily_returns: DataFrame) -> DataFrame:
+    return rolling_beta(daily_returns, n=10)
 
 
-def q_cross_sectional_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return cross_sectional_ranks(_returns(spark, sf_dir))
+def q_cross_sectional_ranks(daily_returns: DataFrame) -> DataFrame:
+    return cross_sectional_ranks(daily_returns)
 
 
 def q_pmi_collocations(documents: DataFrame) -> DataFrame:
     return pmi_collocations(documents, min_count=5, k=100)
 
 
-def q_sharpe_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sharpe_ratios(_returns(spark, sf_dir))
+def q_sharpe_ratios(daily_returns: DataFrame) -> DataFrame:
+    return sharpe_ratios(daily_returns)
 
 
 def q_temperature_mix(documents: DataFrame) -> DataFrame:
@@ -1797,8 +1743,8 @@ def q_ngram_decontaminate(documents: DataFrame) -> DataFrame:
     )
 
 
-def _copurchase_graph(spark: SparkSession, sf_dir: str):
-    # Build-once/query-many graph index (the _ivf_index / _pair_graph
+def d_copurchase_graph(lineitem: DataFrame) -> tuple[DataFrame, DataFrame]:
+    # Build-once/query-many graph index (the ivf_index / pair_graph
     # protocol, BASELINE.md): the edge build is the only lineitem-
     # scale shuffle in PageRank; it amortizes across ranking runs the
     # way an ANN index amortizes across queries. localCheckpoint is
@@ -1808,14 +1754,13 @@ def _copurchase_graph(spark: SparkSession, sf_dir: str):
         build_copurchase_graph,
     )
 
-    def build():
-        deg_edges, nodes = build_copurchase_graph(load_table(spark, sf_dir, "lineitem"))
-        return deg_edges.localCheckpoint(), nodes.localCheckpoint()
-
-    return memo(spark, sf_dir, "copurchase_graph", build)
+    deg_edges, nodes = build_copurchase_graph(lineitem)
+    return deg_edges.localCheckpoint(), nodes.localCheckpoint()
 
 
-def q_part_pagerank(spark: SparkSession, sf_dir: str, lineitem: DataFrame) -> DataFrame:
+def q_part_pagerank(
+    lineitem: DataFrame, copurchase_graph: tuple[DataFrame, DataFrame]
+) -> DataFrame:
     # round 6: K-step fixed-point PageRank over the part co-purchase
     # graph — integer micro-unit algebra keeps all 5 chained
     # iterations bit-exact cross-engine (the temperature_mix move
@@ -1825,11 +1770,11 @@ def q_part_pagerank(spark: SparkSession, sf_dir: str, lineitem: DataFrame) -> Da
         pagerank_copurchase,
     )
 
-    return pagerank_copurchase(lineitem, graph=_copurchase_graph(spark, sf_dir))
+    return pagerank_copurchase(lineitem, graph=copurchase_graph)
 
 
 def q_part_triangles(
-    spark: SparkSession, sf_dir: str, lineitem: DataFrame
+    lineitem: DataFrame, copurchase_graph: tuple[DataFrame, DataFrame]
 ) -> DataFrame:
     # round 6: degree-ordered triangle counting + local clustering
     # coefficients on the co-purchase graph (integer counts — exact
@@ -1838,7 +1783,7 @@ def q_part_triangles(
         triangle_stats,
     )
 
-    return triangle_stats(lineitem, graph=_copurchase_graph(spark, sf_dir))
+    return triangle_stats(lineitem, graph=copurchase_graph)
 
 
 def q_copurchase_rules(lineitem: DataFrame) -> DataFrame:
@@ -1852,10 +1797,12 @@ def q_copurchase_rules(lineitem: DataFrame) -> DataFrame:
     return copurchase_rules(lineitem, top_k=50)
 
 
-def q_part_kcore(spark: SparkSession, sf_dir: str, lineitem: DataFrame) -> DataFrame:
+def q_part_kcore(
+    lineitem: DataFrame, copurchase_graph: tuple[DataFrame, DataFrame]
+) -> DataFrame:
     # round 7 (VERDICT r6 #6): R-round k-peel (k=80, 8 rounds —
     # fixpoint reached by round 6 at every tested SF, pytest-pinned)
-    # — the third consumer of the shared _copurchase_graph memo;
+    # — the third consumer of the shared copurchase_graph memo;
     # integer-only algebra, oracle is 8 unrolled generated CTE peel
     # stages (a recursive-closure oracle would be O(V^2) on this
     # near-dense graph).
@@ -1863,14 +1810,14 @@ def q_part_kcore(spark: SparkSession, sf_dir: str, lineitem: DataFrame) -> DataF
         kcore_peel,
     )
 
-    return kcore_peel(lineitem, k=80, iters=8, graph=_copurchase_graph(spark, sf_dir))
+    return kcore_peel(lineitem, k=80, iters=8, graph=copurchase_graph)
 
 
 def q_part_components(
-    spark: SparkSession, sf_dir: str, lineitem: DataFrame
+    lineitem: DataFrame, copurchase_graph: tuple[DataFrame, DataFrame]
 ) -> DataFrame:
     # round 8 (VERDICT r7 #3): K-round min-label propagation — the
-    # FOURTH consumer of the shared _copurchase_graph memo, giving
+    # FOURTH consumer of the shared copurchase_graph memo, giving
     # the community labels k-core's survivor set doesn't (which parts
     # cluster together, not just which are dense). Integer-only
     # algebra; oracle is 8 unrolled MATERIALIZED propagation stages;
@@ -1879,14 +1826,10 @@ def q_part_components(
         connected_components,
     )
 
-    return connected_components(
-        lineitem, iters=8, graph=_copurchase_graph(spark, sf_dir)
-    )
+    return connected_components(lineitem, iters=8, graph=copurchase_graph)
 
 
-def q_hard_negative_ivf(
-    spark: SparkSession, sf_dir: str, embeddings: DataFrame
-) -> DataFrame:
+def q_hard_negative_ivf(embeddings: DataFrame, ivf_index: IvfIndex) -> DataFrame:
     # round 9: the SCALE path for hard_negative_mining — cross-label
     # negatives mined through the shared IVF index (probe cells, drop
     # same-label members) instead of a full scan per query; the brute
@@ -1896,11 +1839,11 @@ def q_hard_negative_ivf(
     )
 
     return hard_negative_ivf_topk(
-        embeddings, _ann_queries(embeddings), k=5, index=_ivf_index(spark, sf_dir)
+        embeddings, _ann_queries(embeddings), k=5, index=ivf_index
     )
 
 
-# The txn demo tables are build-once/query-many (the _ivf_index
+# The txn demo tables are build-once/query-many (the ivf_index
 # pattern): each lineage is committed once per (applicationId, sf_dir)
 # into its own temp dir; txn_merge_upsert reads the demo table's
 # latest snapshot, txn_time_travel its pinned mid-lineage version, and
@@ -2174,7 +2117,7 @@ def q_pipeline_lineage(spark: SparkSession) -> DataFrame:
     return pipeline_lineage(spark)
 
 
-def q_stateful_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_stateful_features(clean_bars: DataFrame) -> DataFrame:
     # round 10 (VERDICT r9 #5): the §2.9 keyed-state tier made
     # driver-visible — the batch twin of the streaming EMA/VWAP fold
     # (streaming/stateful.py shares _fold_state between both), run
@@ -2184,9 +2127,8 @@ def q_stateful_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         stateful_features_batch,
     )
 
-    bars = _clean_bars(spark, sf_dir)
     return stateful_features_batch(
-        bars.select(
+        clean_bars.select(
             "symbol",
             F.col("trade_date").cast("timestamp").alias("event_time"),
             F.col("close_price").alias("price"),
@@ -2195,9 +2137,7 @@ def q_stateful_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_knn_label_eval_ivf(
-    spark: SparkSession, sf_dir: str, embeddings: DataFrame
-) -> DataFrame:
+def q_knn_label_eval_ivf(embeddings: DataFrame, ivf_index: IvfIndex) -> DataFrame:
     # round 10 (VERDICT r9 #4): the SCALE path for knn_label_eval —
     # LOO 1-NN label accuracy through the shared IVF index (probe 16
     # cells, nearest home-cell member votes) instead of the
@@ -2207,7 +2147,7 @@ def q_knn_label_eval_ivf(
         knn_label_eval_ivf,
     )
 
-    return knn_label_eval_ivf(embeddings, index=_ivf_index(spark, sf_dir))
+    return knn_label_eval_ivf(embeddings, index=ivf_index)
 
 
 def q_ann_sq8_topk(embeddings: DataFrame) -> DataFrame:
@@ -2265,20 +2205,20 @@ def q_classifier_calibration(documents: DataFrame) -> DataFrame:
 
 
 def q_degree_distribution(
-    spark: SparkSession, sf_dir: str, lineitem: DataFrame
+    lineitem: DataFrame, copurchase_graph: tuple[DataFrame, DataFrame]
 ) -> DataFrame:
     # round 9: the graph's one-page summary (degree histogram with
-    # isolated nodes) — FIFTH consumer of the shared _copurchase_graph
+    # isolated nodes) — FIFTH consumer of the shared copurchase_graph
     # memo; node-grain count + 1-row broadcast total, no edge shuffle.
     from stock_market_data_pipeline_v2_spark.operators.graph import (
         degree_distribution,
     )
 
-    return degree_distribution(lineitem, graph=_copurchase_graph(spark, sf_dir))
+    return degree_distribution(lineitem, graph=copurchase_graph)
 
 
 def q_link_prediction(
-    spark: SparkSession, sf_dir: str, lineitem: DataFrame
+    lineitem: DataFrame, copurchase_graph: tuple[DataFrame, DataFrame]
 ) -> DataFrame:
     # round 9: per-seed common-neighbor link prediction (top-5
     # non-adjacent partners per seed part + neighborhood Jaccard) —
@@ -2290,7 +2230,7 @@ def q_link_prediction(
         link_prediction_cn,
     )
 
-    return link_prediction_cn(lineitem, graph=_copurchase_graph(spark, sf_dir))
+    return link_prediction_cn(lineitem, graph=copurchase_graph)
 
 
 def q_bloom_decontaminate(documents: DataFrame) -> DataFrame:
@@ -2361,12 +2301,12 @@ def q_users_only_before(events: DataFrame) -> DataFrame:
     return users_only_before(events)
 
 
-def q_top_volume_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return top_volume_days(_clean_bars(spark, sf_dir))
+def q_top_volume_days(clean_bars: DataFrame) -> DataFrame:
+    return top_volume_days(clean_bars)
 
 
-def q_return_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return return_correlations(_returns(spark, sf_dir))
+def q_return_correlations(daily_returns: DataFrame) -> DataFrame:
+    return return_correlations(daily_returns)
 
 
 def q_multimodal_meta(documents: DataFrame) -> DataFrame:
@@ -2405,44 +2345,40 @@ def q_multimodal_frames(documents: DataFrame) -> DataFrame:
     return sample_frames(attach_binary(documents)).drop("frame")
 
 
-def _ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memo(
-        spark, sf_dir, "ticks", lambda: tick_events(load_table(spark, sf_dir, "events"))
-    )
+def d_ticks(events: DataFrame) -> DataFrame:
+    return tick_events(events)
 
 
 def q_multi_grain_bars(events: DataFrame) -> DataFrame:
     return multi_grain_bars(events)
 
 
-def q_daily_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return daily_vwap(_ticks(spark, sf_dir))
+def q_daily_vwap(ticks: DataFrame) -> DataFrame:
+    return daily_vwap(ticks)
 
 
-def q_forward_fill_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return forward_fill_bars(_clean_bars(spark, sf_dir))
+def q_forward_fill_bars(clean_bars: DataFrame) -> DataFrame:
+    return forward_fill_bars(clean_bars)
 
 
-def q_window_agg_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return window_aggregate_15m(_ticks(spark, sf_dir))
+def q_window_agg_15m(ticks: DataFrame) -> DataFrame:
+    return window_aggregate_15m(ticks)
 
 
-def q_windowed_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return windowed_analytics(_ticks(spark, sf_dir), strategy="interval_join")
+def q_windowed_analytics(ticks: DataFrame) -> DataFrame:
+    return windowed_analytics(ticks, strategy="interval_join")
 
 
-def q_windowed_analytics_reagg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return windowed_analytics(_ticks(spark, sf_dir), strategy="reaggregate")
+def q_windowed_analytics_reagg(ticks: DataFrame) -> DataFrame:
+    return windowed_analytics(ticks, strategy="reaggregate")
 
 
-def q_windowed_analytics_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return windowed_analytics(_ticks(spark, sf_dir), strategy="range_join")
+def q_windowed_analytics_range_join(ticks: DataFrame) -> DataFrame:
+    return windowed_analytics(ticks, strategy="range_join")
 
 
-def q_realtime_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return realtime_signals(
-        enrich_realtime(stage_realtime(windowed_analytics(_ticks(spark, sf_dir))))
-    )
+def q_realtime_signals(ticks: DataFrame) -> DataFrame:
+    return realtime_signals(enrich_realtime(stage_realtime(windowed_analytics(ticks))))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -2541,21 +2477,38 @@ _QUERY_ORDER = [
 ]
 
 
-def _configured(build: Callable[..., DataFrame], params: list[str]):
+def _configured(
+    build: Callable[..., DataFrame],
+    derived: dict[str, Callable],
+    params: dict[Callable, list[str]],
+):
     """``build`` behind the session contract: the driver owns the
     session (any timezone; ``events.ts`` needs the nanosAsLong conf),
     so every registered call applies ``configure_runtime`` first —
     memo hits included — and only then resolves the builder's
-    ``params``: ``spark``, ``sf_dir`` or a testdata table, which is
-    passed as ``load_table(spark, sf_dir, <table>)``."""
+    parameters: ``spark``, ``sf_dir``, a testdata table, passed as
+    ``load_table(spark, sf_dir, <table>)``, or a derived input ``name``,
+    passed as ``memo(spark, sf_dir, name, build)``. That ``build`` calls
+    ``d_<name>`` with its own parameters resolved the same way, and
+    only inside the memo's build: a memo hit costs one lookup and one
+    fresh ``select("*")``."""
 
     @functools.wraps(build)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         configure_runtime(spark)
         given = {"spark": spark, "sf_dir": sf_dir}
-        return build(
-            **{p: given[p] if p in given else load_table(spark, sf_dir, p) for p in params}
-        )
+
+        def call(f: Callable):
+            return f(**{p: resolve(p) for p in params[f]})
+
+        def resolve(p: str):
+            if p in given:
+                return given[p]
+            if p in derived:
+                return memo(spark, sf_dir, p, lambda: call(derived[p]))
+            return load_table(spark, sf_dir, p)
+
+        return call(build)
 
     return run
 
@@ -2563,11 +2516,17 @@ def _configured(build: Callable[..., DataFrame], params: list[str]):
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     funcs = {n[2:]: f for n, f in globals().items() if n.startswith("q_")}
     assert set(funcs) == set(_QUERY_ORDER), set(funcs) ^ set(_QUERY_ORDER)
-    params = {n: list(inspect.signature(f).parameters) for n, f in funcs.items()}
-    inputs = {"spark", "sf_dir", *TESTDATA_TABLES}
-    unknown = [(n, p) for n, ps in params.items() for p in ps if p not in inputs]
+    derived = {n[2:]: f for n, f in globals().items() if n.startswith("d_")}
+    params = {
+        f: list(inspect.signature(f).parameters)
+        for f in [*funcs.values(), *derived.values()]
+    }
+    inputs = {"spark", "sf_dir", *TESTDATA_TABLES, *derived}
+    unknown = [
+        (f.__name__, p) for f, ps in params.items() for p in ps if p not in inputs
+    ]
     assert not unknown, f"builder parameters that name no input: {unknown}"
-    return {n: _configured(funcs[n], params[n]) for n in _QUERY_ORDER}
+    return {n: _configured(funcs[n], derived, params) for n in _QUERY_ORDER}
 
 
 # Registered queries without an oracle: their rows are checked, not

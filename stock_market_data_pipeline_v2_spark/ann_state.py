@@ -35,8 +35,8 @@ from pathlib import Path
 
 STATE_DIR = Path(__file__).resolve().parent / "index_state"
 
-# Entry-contract geometry (must match __spark_entry__._ivf_index /
-# _pq_index and the tier defaults).
+# Entry-contract geometry (must match __spark_entry__.d_ivf_index /
+# d_pq_index and the tier defaults).
 IVF_N_ASSIGN = 3
 IVF_N_PROBE = 16
 DIM = 64

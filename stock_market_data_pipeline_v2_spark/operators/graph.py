@@ -79,7 +79,7 @@ def build_copurchase_graph(
 ) -> tuple[DataFrame, DataFrame]:
     """The graph INDEX: (deg_edges, nodes) — distinct directed edges
     with out-degree folded in, and the vertex set. Build-once/query-
-    many state (the ``_ivf_index`` pattern): callers that iterate or
+    many state (the ``ivf_index`` pattern): callers that iterate or
     re-query should build this once, persist/checkpoint it, and pass
     it to :func:`pagerank_copurchase` — the build (the only lineitem-
     scale shuffle in the algorithm) amortizes across every downstream
@@ -407,7 +407,7 @@ def kcore_peel(
     integer; there is nothing to drift.
 
     100 TB design: the edge build amortizes via the shared
-    ``_copurchase_graph`` session memo; each round shuffles at most
+    ``copurchase_graph`` session memo; each round shuffles at most
     one (node, count) row per surviving node, and the survivor frame
     feeds exactly one downstream join so the K-deep lazy plan stays
     linear in ``iters`` (no per-round checkpoint needed).
@@ -489,7 +489,7 @@ def connected_components(
     counts); there is nothing to drift.
 
     100 TB design: the edge build amortizes via the shared
-    ``_copurchase_graph`` session memo. SELF-LOOPS are appended to
+    ``copurchase_graph`` session memo. SELF-LOOPS are appended to
     the edge list once, so each round is ONE edges⋈labels hash join
     (SHUFFLE_HASH on the node-bounded label side — a sort-merge join
     would re-sort the full edge list every round, the measured k-core

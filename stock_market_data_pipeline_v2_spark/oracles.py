@@ -1446,7 +1446,7 @@ ORDER BY t.doc_id
 
 # operators/curation.py:cross_source_contamination — the pair CTE is
 # DEDUP_NGRAM_JACCARD_SQL verbatim (single source of truth: the Spark query
-# consumes the SAME pair graph _pair_graph builds from
+# consumes the SAME pair graph d_pair_graph builds from
 # shingle_jaccard_pairs), then symmetrize → enrich with sources →
 # count distinct contaminated docs per ordered source pair over the
 # full spine (zero rows explicit).

@@ -50,11 +50,15 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 # It holds plans and indexes, never query results: the LAZY plans of
 # the testdata tables (``"<table>.parquet"``; resolving a parquet
 # source costs ~0.14 s of listing, footer reads and py4j) and of the
-# most shared derived frames (the bar/tick cleaning chains, ~0.2-0.35 s
-# of plan construction), whose every action still scans parquet; and
-# built INDEX state (the near-dup pair graph and the co-purchase graph
-# via localCheckpoint, the IVF/PQ indexes, the txn demo tables), paid
-# once per session. Every build is deterministic.
+# derived inputs the query registry resolves by parameter name
+# (``__spark_entry__.d_<name>``, entry ``name``): the bar/tick
+# cleaning chains and the marts over them (``clean_bars``,
+# ``daily_returns``, ``rolling_indicators``, ``stock_performance``,
+# ``ticks``; ~0.2-0.7 s of plan construction each), whose every action
+# still scans parquet; and built INDEX state (``pair_graph`` and
+# ``copurchase_graph`` via localCheckpoint, ``ivf_index``/``pq_index``,
+# the txn demo tables), paid once per session. Every build is
+# deterministic.
 _MEMO: dict[tuple[str, str, str], object] = {}
 
 

@@ -1,7 +1,7 @@
 """The query registry: ``_QUERY_ORDER`` plus the module's ``q_<name>``
-functions, each served behind ``configure_runtime`` with its table
-parameters resolved; the oracles and the bench headline derived from
-it; and the one memo, ``sources.io.memo``."""
+functions, each served behind ``configure_runtime`` with its table and
+derived-input parameters resolved; the oracles and the bench headline
+derived from it; and the one memo, ``sources.io.memo``."""
 
 from __future__ import annotations
 
@@ -23,18 +23,83 @@ def test_registered_query_configures_session_on_memo_hit(spark):
 
 
 def test_queries_rejects_a_parameter_that_names_no_input(monkeypatch):
-    """A builder parameter is ``spark``, ``sf_dir`` or a testdata table;
-    a misspelled table name fails the registry, not a later scan."""
+    """A builder parameter is ``spark``, ``sf_dir``, a testdata table or
+    a derived input; a misspelled table or derived name fails the
+    registry, not a later scan."""
     import pytest
 
     import __spark_entry__ as m
 
-    def q_daily_bars(spark, lineitems):
+    def q_daily_bars(spark, lineitems, clean_bar):
         raise AssertionError("the registry must not build this")
 
     monkeypatch.setattr(m, "q_daily_bars", q_daily_bars)
-    with pytest.raises(AssertionError, match="lineitems"):
+    with pytest.raises(AssertionError, match="lineitems") as raised:
         m.queries()
+    assert "'clean_bar'" in str(raised.value)
+
+
+def test_memo_hit_resolves_no_inputs(spark, monkeypatch):
+    """A derived input's own inputs are resolved only inside its memo
+    build: once ``stock_performance`` is built, a registered call makes
+    one memo lookup, adds no entry, loads no table and runs no ``d_*``
+    build (an eager resolver would load ``events`` for ``clean_bars``)."""
+    import functools
+
+    import __spark_entry__ as m
+    from stock_market_data_pipeline_v2_spark.sources import io
+
+    m.queries()["stock_performance"](spark, m.SF0001)
+    entries = len(io._MEMO)
+    lookups, loads, builds = [], [], []
+
+    def recording(calls, f, label):
+        @functools.wraps(f)
+        def wrapper(*args, **kwargs):
+            calls.append(label(*args, **kwargs))
+            return f(*args, **kwargs)
+
+        return wrapper
+
+    monkeypatch.setattr(m, "memo", recording(lookups, m.memo, lambda s, d, n, b: n))
+    monkeypatch.setattr(
+        m, "load_table", recording(loads, m.load_table, lambda s, d, n: n)
+    )
+    for name in [n for n in vars(m) if n.startswith("d_")]:
+        f = getattr(m, name)
+        monkeypatch.setattr(m, name, recording(builds, f, lambda *a, n=name, **k: n))
+
+    m.queries()["stock_performance"](spark, m.SF0001)
+    assert (lookups, loads, builds) == (["stock_performance"], [], [])
+    assert len(io._MEMO) == entries
+
+
+def test_derived_input_is_a_fresh_select_over_the_memo(spark, monkeypatch):
+    """A memo can never leak execution state into a later caller: each
+    call hands the builder its own ``select("*")`` over the stored
+    DataFrame, never the object in ``io._MEMO``, so an action on one
+    caller's frame leaves the next caller a fresh QueryExecution."""
+    import __spark_entry__ as m
+    from stock_market_data_pipeline_v2_spark.sources import io
+
+    handed = []
+
+    def q_daily_summary(stock_performance):
+        handed.append(stock_performance)
+        return stock_performance
+
+    monkeypatch.setattr(m, "q_daily_summary", q_daily_summary)
+    qs = m.queries()
+    qs["daily_summary"](spark, m.SF0001).limit(1).collect()
+    qs["daily_summary"](spark, m.SF0001)
+    stored = io._MEMO[(spark.sparkContext.applicationId, m.SF0001, "stock_performance")]
+    first, second = handed
+    assert first is not stored and second is not stored and first is not second
+    for df in handed:
+        logical = df._jdf.queryExecution().logical()
+        assert logical.getClass().getSimpleName() == "Project"
+        assert logical.child().equals(stored._jdf.queryExecution().analyzed())
+    assert not first._jdf.queryExecution().equals(second._jdf.queryExecution())
 
 
 def test_one_module_level_memo():

@@ -128,7 +128,7 @@ def main() -> None:
 
     qs = embs.filter(F.col("vec_id") % 100 == 0)
     # Build-once index for the IVF query-path rows (the architecture
-    # under bench: __spark_entry__._ivf_index). Its own cost is probed
+    # under bench: __spark_entry__.d_ivf_index). Its own cost is probed
     # separately as `ivf_build` — expected ~n^1.5 while n_cells = √n
     # grows (the assignment scan is n·n_cells dots), flattening to
     # linear once n_cells hits the 4096 cap at n ≈ 16.8M.
@@ -168,7 +168,7 @@ def main() -> None:
             "n_shingles >= 0"
         ),
         # includes the pair-graph build (the bench splits it out via
-        # the shared _pair_graph memo; here the full cost is probed)
+        # the shared pair_graph memo; here the full cost is probed)
         "cross_source_contamination": lambda: cross_source_contamination(
             docs, shingle_jaccard_pairs(docs, threshold=0.5, max_shingle_freq=1000)
         ).filter("contamination_rate >= 0"),

@@ -13,7 +13,7 @@ replica, same sources, so the labeled slice and the range-rank frame
 grow ×N.
 
 The IVF row times the QUERY path over an index built on the
-replicated corpus (the `_ivf_index` build-once protocol; the build is
+replicated corpus (the `ivf_index` build-once protocol; the build is
 its own row). A vote-coverage gate (total votes == corpus rows)
 checks the IVF eval's semantics hold at scale, not just its speed.
 

@@ -12,7 +12,7 @@ profiler, offset keys scale the high-cardinality distinct counts ×N
 while flag columns stay constant-cardinality — the realistic shape.
 
 Graph rows time the QUERY path over a prebuilt, localCheckpoint-ed
-graph (the `_copurchase_graph` memo protocol: the build amortizes
+graph (the `copurchase_graph` memo protocol: the build amortizes
 across the family and is reported as its own row).
 
 Usage: python tools/scale_probe_warehouse.py [--mult 10] [--sf DIR]
