@@ -213,8 +213,8 @@ SF0001 = "/root/testdata/sf0.001"
 # parameters name its own inputs (tables or other derived inputs), and a
 # builder that names ``name`` is passed ``memo(spark, sf_dir, name, ...)``
 # (``_configured``). The lazy plans are the shared cleaning chains (about
-# 0.2-0.7 s of plan construction each); the indexes and graphs are built
-# state, paid once per session.
+# 50-100 ms of plan construction each at sf0.01, 4 vCPUs); the indexes and
+# graphs are built state, paid once per session.
 
 
 def d_clean_bars(events: DataFrame) -> DataFrame:
@@ -222,23 +222,24 @@ def d_clean_bars(events: DataFrame) -> DataFrame:
 
 
 def d_daily_returns(clean_bars: DataFrame) -> DataFrame:
-    # rebuilt by 13 registered queries (returns/moments/outliers/beta/
-    # sharpe/ranks/correlations/similarity/pattern families) at a
-    # measured ~0.2 s of eager re-analysis per call
+    # read by 13 registered queries (returns/moments/outliers/beta/
+    # sharpe/ranks/correlations/similarity/pattern families); a rebuild
+    # costs about 60 ms of plan construction
     return daily_returns(clean_bars)
 
 
 def d_rolling_indicators(daily_returns: DataFrame) -> DataFrame:
     # consumed by q_rolling_indicators AND the performance mart below
-    # (~0.55 s of eager plan analysis per rebuild)
+    # (about 70 ms of plan construction per rebuild)
     return rolling_indicators(daily_returns)
 
 
 def d_stock_performance(
     clean_bars: DataFrame, rolling_indicators: DataFrame
 ) -> DataFrame:
-    # returns -> rolling indicators -> signal projection (~0.7 s of plan
-    # build), feeding q_stock_performance and q_daily_summary
+    # returns -> rolling indicators -> signal projection (about 0.25 s of
+    # plan construction from the bars), feeding q_stock_performance and
+    # q_daily_summary
     return stock_performance(clean_bars, enriched=rolling_indicators)
 
 

@@ -42,7 +42,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    from stock_market_data_pipeline_v2_spark.session import get_spark
+    from stock_market_data_pipeline_v2_spark.session import count_round_trips, get_spark
 
     import __spark_entry__ as entrymod
 
@@ -77,17 +77,22 @@ def main() -> None:
     # still compiled (Janino compilations, one per cache miss). Nonzero
     # means the row's working set outgrew session.get_spark's cache cap.
     codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    # And what its plan construction cost: the py4j round trips of its
+    # second build (PERF.md lesson 12).
     timings: dict[str, float] = {}
     compiles: dict[str, int] = {}
+    round_trips: dict[str, int] = {}
     for name in names:
         best = float("inf")
         for _ in range(2):
             c0 = codegen.METRIC_COMPILATION_TIME().getCount()
             t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
+            with count_round_trips() as rt:
+                df = qs[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
             compiles[name] = codegen.METRIC_COMPILATION_TIME().getCount() - c0
+            round_trips[name] = rt.n
             release_cached_inputs(df)
         timings[name] = round(best, 3)
 
@@ -112,8 +117,11 @@ def main() -> None:
     # git archaeology for cross-round citations); git_head in every
     # record makes each run's code state citable directly.
     short = _short_keys(list(timings))
+    record = {
+        **full, "codegen_compiles": compiles, "build_round_trips": round_trips, "key_map": short
+    }
     Path(__file__).resolve().parent.joinpath("BENCH_driver.out").write_text(
-        json.dumps({**full, "codegen_compiles": compiles, "key_map": short}, indent=1) + "\n"
+        json.dumps(record, indent=1) + "\n"
     )
     # Human/log line first (may be cut from the tail; that's fine)...
     print(json.dumps(full))

@@ -6,6 +6,15 @@ The reference guards divisions two ways: ``nullif(d, 0)`` inline
 (``dbt/macros/safe_divide.sql:1-7``). Both live here with explicit
 modes. Everything is a Column-in/Column-out expression — Catalyst
 constant-folds and codegens these; no UDFs.
+
+``round_away`` and ``null_if_zero_divide`` also come as SQL text
+(``round_away_sql``, ``null_if_zero_divide_sql``) for projections
+written as one ``selectExpr`` list: Spark parses a whole list in one
+call, where the Column forms build the same tree one py4j round trip
+per node (PERF.md lesson 12). Each pair parses to the same expression
+tree; ``tests/test_properties.py`` pins that. SQL literals are typed as
+the Column forms type them: ``sql_double`` writes a DOUBLE (a bare
+``0.5`` parses as DECIMAL).
 """
 
 from __future__ import annotations
@@ -17,6 +26,28 @@ from pyspark.sql import functions as F
 def null_if_zero_divide(numerator: Column, denominator: Column) -> Column:
     """``num / nullif(den, 0)`` — NULL on zero denominator."""
     return numerator / F.nullif(denominator, F.lit(0))
+
+
+def sql_double(value: float) -> str:
+    """A DOUBLE literal in SQL text for ``value``: ``2.0D``, ``1e-05``
+    (a bare ``2.0`` would parse as DECIMAL)."""
+    text = repr(float(value))
+    return text if "e" in text else f"{text}D"
+
+
+def _operand(expr: str) -> str:
+    """``expr`` as the operand of a binary operator: parenthesized
+    unless it is a bare name. Only as needed: the parser decides what a
+    ``(`` opens by scanning to its matching ``)``, and caches a DFA
+    state per token of every group it has seen (lesson 12)."""
+    return expr if expr.isidentifier() else f"({expr})"
+
+
+def null_if_zero_divide_sql(numerator: str, denominator: str) -> str:
+    """SQL text of :func:`null_if_zero_divide` over SQL operands. Not
+    parenthesized: wrap it where it is the right operand of ``*``,
+    ``/`` or ``%``."""
+    return f"{_operand(numerator)} / nullif({denominator}, 0)"
 
 
 def safe_divide(numerator: Column, denominator: Column, default: float | None = 0.0) -> Column:
@@ -48,6 +79,17 @@ def round_away(col: Column, digits: int = 0) -> Column:
             -F.floor(-scaled + F.lit(0.5))
         )
         / p
+    )
+
+
+def round_away_sql(expr: str, digits: int = 0) -> str:
+    """SQL text of :func:`round_away` over the SQL operand ``expr``:
+    the same tree, with the operand in the same three places. Not
+    parenthesized, like :func:`null_if_zero_divide_sql`."""
+    x, p = _operand(expr), sql_double(10**digits)
+    return (
+        f"CASE WHEN {x} >= 0 THEN floor({x} * {p} + 0.5D) "
+        f"ELSE -floor(-({x} * {p}) + 0.5D) END / {p}"
     )
 
 

@@ -48,28 +48,33 @@ def bars_from_events(
     Open/close are argmin/argmax of price by (ts, id) — the id
     tiebreak keeps the result deterministic under equal timestamps.
     """
-    order_key = F.struct(F.col(ts_col), F.col(id_col))
     # try_cast, not cast: under default ANSI mode one malformed
     # props.$.k (or price) value would abort the whole ingest job —
     # cleaning paths null malformed rows out instead (same contract
     # as tick_events in realtime.py; oracle mirrors with TRY_CAST).
-    qty = F.get_json_object(F.col(qty_json_col), qty_json_path).try_cast("long")
+    # SQL text: one parse per list, not one py4j call per node
+    # (PERF.md lesson 12).
     return (
-        events.select(
-            F.upper(F.trim(F.col(entity_col))).alias("symbol"),
-            F.to_date(F.col(ts_col)).alias("trade_date"),
-            F.col(price_col).try_cast("double").alias("price"),
-            order_key.alias("order_key"),
-            qty.alias("qty"),
+        events.selectExpr(
+            f"upper(trim(`{entity_col}`)) AS symbol",
+            f"to_date(`{ts_col}`) AS trade_date",
+            f"TRY_CAST(`{price_col}` AS DOUBLE) AS price",
+            f"struct(`{ts_col}`, `{id_col}`) AS order_key",
+            f"TRY_CAST(get_json_object(`{qty_json_col}`, '{qty_json_path}') AS BIGINT) AS qty",
         )
         .groupBy("symbol", "trade_date")
         .agg(
-            F.min_by("price", "order_key").alias("open_price"),
-            F.max("price").alias("high_price"),
-            F.min("price").alias("low_price"),
-            F.max_by("price", "order_key").alias("close_price"),
-            F.sum("qty").alias("volume"),
-            F.count(F.lit(1)).alias("n_trades"),
+            *map(
+                F.expr,
+                (
+                    "min_by(price, order_key) AS open_price",
+                    "max(price) AS high_price",
+                    "min(price) AS low_price",
+                    "max_by(price, order_key) AS close_price",
+                    "sum(qty) AS volume",
+                    "count(1) AS n_trades",
+                ),
+            )
         )
     )
 
@@ -113,11 +118,11 @@ def filter_clean_bars(bars: DataFrame) -> DataFrame:
     """Apply the staging-quality filters to an already-typed bar frame
     (used when bars come from :func:`bars_from_events`)."""
     return (
-        bars.filter(F.col("symbol").isNotNull())
-        .filter(F.col("trade_date").isNotNull())
-        .filter(F.col("close_price").isNotNull() & (F.col("close_price") > 0))
-        .filter(F.col("volume") >= 0)
-        .filter(F.col("trade_date") <= F.current_date())
+        bars.filter("symbol IS NOT NULL")
+        .filter("trade_date IS NOT NULL")
+        .filter("close_price IS NOT NULL AND close_price > 0")
+        .filter("volume >= 0")
+        .filter("trade_date <= current_date()")
     )
 
 
@@ -129,32 +134,21 @@ def daily_vwap(ticks: DataFrame) -> DataFrame:
     single-shuffle shape as the bar build. Null-qty ticks contribute
     to ``n_ticks`` but not to the weighted sums; a day with zero
     total quantity yields NULL vwap (guarded divide)."""
-    from ..functions.core import null_if_zero_divide, round_away
+    from ..functions.core import null_if_zero_divide_sql, round_away_sql
 
-    priced = F.when(
-        F.col("price").isNotNull() & F.col("qty").isNotNull(),
-        F.col("price") * F.col("qty"),
-    )
-    qty_w = F.when(
-        F.col("price").isNotNull() & F.col("qty").isNotNull(), F.col("qty")
-    )
+    both = "price IS NOT NULL AND qty IS NOT NULL"
+    priced = f"sum(CASE WHEN {both} THEN price * qty END)"
+    qty_w = f"sum(CASE WHEN {both} THEN qty END)"
+    vwap = round_away_sql(null_if_zero_divide_sql(priced, f"CAST({qty_w} AS DOUBLE)"), 4)
     return (
-        ticks.select(
-            "symbol",
-            F.to_date("event_time").alias("trade_date"),
-            "price",
-            F.col("volume").alias("qty"),
+        ticks.selectExpr(
+            "symbol", "to_date(event_time) AS trade_date", "price", "volume AS qty"
         )
         .groupBy("symbol", "trade_date")
         .agg(
-            round_away(
-                null_if_zero_divide(
-                    F.sum(priced), F.sum(qty_w).cast("double")
-                ),
-                4,
-            ).alias("vwap"),
-            F.sum(qty_w).cast("long").alias("total_qty"),
-            F.count(F.lit(1)).alias("n_ticks"),
+            F.expr(f"{vwap} AS vwap"),
+            F.expr(f"CAST({qty_w} AS BIGINT) AS total_qty"),
+            F.expr("count(1) AS n_ticks"),
         )
     )
 

@@ -22,10 +22,9 @@ across executors and AQE handles hot symbols.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from ..functions.core import null_if_zero_divide, round_away
+from ..functions.core import null_if_zero_divide_sql, round_away_sql, sql_double
 
 SQRT_252 = 252**0.5  # trading days/year (int_rolling_metrics.sql:68)
 SMA_DAYS = (5, 10, 20, 50)  # int_rolling_metrics.sql:33-55
@@ -41,33 +40,32 @@ def rolling_indicators(
     Each raw window aggregate is projected once under a ``__`` name;
     the rounded outputs are derived from those columns one projection
     up, which drops them (PERF.md lesson 10)."""
-    w = Window.partitionBy(partition_col).orderBy(order_col)
-    w20 = w.rowsBetween(-19, 0)
-    w14 = w.rowsBetween(-13, 0)
+    w = f"PARTITION BY `{partition_col}` ORDER BY `{order_col}`"
 
-    ret = F.col("daily_return_pct")
-    raw = returns.select(
+    def rows(n: int) -> str:
+        return f"{w} ROWS BETWEEN {n - 1} PRECEDING AND CURRENT ROW"
+
+    ret = "daily_return_pct"
+    raw = returns.selectExpr(
         "*",
-        *(
-            F.avg("close_price").over(w.rowsBetween(-(n - 1), 0)).alias(f"__sma{n}")
-            for n in SMA_DAYS
-        ),
-        F.stddev_samp("daily_return_pct").over(w20).alias("__vol20"),
-        F.avg("volume").over(w20).alias("__avg_vol20"),
-        F.avg(F.when(ret > 0, ret).otherwise(F.lit(0.0))).over(w14).alias("__avg_gain"),
-        F.avg(F.when(ret < 0, F.abs(ret)).otherwise(F.lit(0.0))).over(w14).alias("__avg_loss"),
+        *(f"avg(close_price) OVER ({rows(n)}) AS __sma{n}" for n in SMA_DAYS),
+        f"stddev_samp({ret}) OVER ({rows(20)}) AS __vol20",
+        f"avg(volume) OVER ({rows(20)}) AS __avg_vol20",
+        f"avg(CASE WHEN {ret} > 0 THEN {ret} ELSE 0.0D END) OVER ({rows(14)}) AS __avg_gain",
+        f"avg(CASE WHEN {ret} < 0 THEN abs({ret}) ELSE 0.0D END) OVER ({rows(14)})"
+        " AS __avg_loss",
     )
-    vol20, avg_vol20 = F.col("__vol20"), F.col("__avg_vol20")
     # 100 - 100/(1 + nullif(gain/nullif(loss,0), 0))  (int_rolling_metrics.sql:85-104)
-    rs = F.nullif(null_if_zero_divide(F.col("__avg_gain"), F.col("__avg_loss")), F.lit(0.0))
-    rsi = round_away(F.lit(100.0) - (F.lit(100.0) / (F.lit(1.0) + rs)), 2)
+    rs = f"nullif({null_if_zero_divide_sql('__avg_gain', '__avg_loss')}, 0.0D)"
+    rsi = round_away_sql(f"100.0D - 100.0D / (1.0D + {rs})", 2)
 
-    return raw.select(
-        *returns.columns,
-        *(round_away(f"__sma{n}", 4).alias(f"sma_{n}d") for n in SMA_DAYS),
-        round_away(vol20, 4).alias("volatility_20d_pct"),
-        round_away(vol20 * F.lit(SQRT_252), 4).alias("annualised_volatility_pct"),
-        round_away(avg_vol20, 0).alias("avg_volume_20d"),
-        round_away(null_if_zero_divide(F.col("volume"), avg_vol20), 4).alias("volume_vs_avg_20d"),
-        rsi.alias("rsi_14"),
+    return raw.selectExpr(
+        *(f"`{c}`" for c in returns.columns),
+        *(f"{round_away_sql(f'__sma{n}', 4)} AS sma_{n}d" for n in SMA_DAYS),
+        f"{round_away_sql('__vol20', 4)} AS volatility_20d_pct",
+        f"{round_away_sql(f'__vol20 * {sql_double(SQRT_252)}', 4)} AS annualised_volatility_pct",
+        f"{round_away_sql('__avg_vol20', 0)} AS avg_volume_20d",
+        f"{round_away_sql(null_if_zero_divide_sql('volume', '__avg_vol20'), 4)}"
+        " AS volume_vs_avg_20d",
+        f"{rsi} AS rsi_14",
     )

@@ -29,7 +29,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from ..functions.core import null_if_zero_divide, round_away
+from ..functions.core import (
+    null_if_zero_divide,
+    null_if_zero_divide_sql,
+    round_away,
+    round_away_sql,
+    sql_double,
+)
 
 
 def bollinger_bands(
@@ -40,26 +46,26 @@ def bollinger_bands(
     order_col: str = "trade_date",
 ) -> DataFrame:
     """SMA(n) ± k·stddev(n) over close, plus %B position in band."""
-    w = Window.partitionBy(partition_col).orderBy(order_col).rowsBetween(-(n - 1), 0)
-    mid, sd = F.col("__mid"), F.col("__sd")
-    upper = mid + k * sd
-    lower = mid - k * sd
-    return returns.select(
-        partition_col,
-        order_col,
-        "close_price",
-        F.avg("close_price").over(w).alias("__mid"),
-        F.stddev_samp("close_price").over(w).alias("__sd"),
-    ).select(
-        partition_col,
-        order_col,
-        "close_price",
-        round_away(mid, 4).alias("bb_mid"),
-        round_away(upper, 4).alias("bb_upper"),
-        round_away(lower, 4).alias("bb_lower"),
-        round_away(
-            null_if_zero_divide(F.col("close_price") - lower, upper - lower) * 100, 4
-        ).alias("bb_pct_b"),
+    w = (
+        f"PARTITION BY `{partition_col}` ORDER BY `{order_col}`"
+        f" ROWS BETWEEN {n - 1} PRECEDING AND CURRENT ROW"
+    )
+    # ``__sd * k``, not ``k * __sd``: the operand order is part of the
+    # plan (PERF.md lesson 12)
+    kd = sql_double(k)
+    upper, lower = f"__mid + __sd * {kd}", f"__mid - __sd * {kd}"
+    pct_b = null_if_zero_divide_sql(f"close_price - ({lower})", f"{upper} - ({lower})")
+    keys = (f"`{partition_col}`", f"`{order_col}`", "close_price")
+    return returns.selectExpr(
+        *keys,
+        f"avg(close_price) OVER ({w}) AS __mid",
+        f"stddev_samp(close_price) OVER ({w}) AS __sd",
+    ).selectExpr(
+        *keys,
+        f"{round_away_sql('__mid', 4)} AS bb_mid",
+        f"{round_away_sql(upper, 4)} AS bb_upper",
+        f"{round_away_sql(lower, 4)} AS bb_lower",
+        f"{round_away_sql(f'{pct_b} * 100', 4)} AS bb_pct_b",
     )
 
 

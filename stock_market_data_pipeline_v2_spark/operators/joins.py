@@ -39,8 +39,7 @@ def interval_left_join(
     interval: str = "1 hour",
 ) -> DataFrame:
     """J1 as an equi join on the derived containing-bucket start."""
-    bucket = F.window(F.col(left_ts), interval).start.alias("__bucket")
-    lhs = left.withColumn("__bucket", bucket)
+    lhs = left.withColumn("__bucket", F.expr(f"window(`{left_ts}`, '{interval}').start"))
     rhs = right.withColumnRenamed(right_start, "__bucket")
     return lhs.join(rhs, [*keys, "__bucket"], "left").drop("__bucket")
 

@@ -23,10 +23,10 @@ oracle-compared.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.core import null_if_zero_divide, round_away
+from ..functions.core import null_if_zero_divide_sql, round_away_sql
 from .indicators import rolling_indicators
 from .returns import daily_returns
 
@@ -62,16 +62,15 @@ PERFORMANCE_COLUMNS = [
 ]
 
 
-def crossover_signal(fast: str, slow: str) -> F.Column:
+def crossover_signal_sql(fast: str, slow: str) -> str:
     """C4/C5 level-comparison signal (mart_stock_performance.sql:53-63).
 
     Level comparison, not an edge detector — NULL SMAs fall through to
     NEUTRAL exactly as SQL CASE does.
     """
     return (
-        F.when(F.col(fast) > F.col(slow), F.lit("GOLDEN_CROSS"))
-        .when(F.col(fast) < F.col(slow), F.lit("DEATH_CROSS"))
-        .otherwise(F.lit("NEUTRAL"))
+        f"CASE WHEN `{fast}` > `{slow}` THEN 'GOLDEN_CROSS'"
+        f" WHEN `{fast}` < `{slow}` THEN 'DEATH_CROSS' ELSE 'NEUTRAL' END"
     )
 
 
@@ -83,11 +82,13 @@ def stock_performance(
     enriched: DataFrame | None = None,
 ) -> DataFrame:
     """``enriched``: a prebuilt ``rolling_indicators(daily_returns(...))``
-    frame (r13: the entry module memoizes that shared chain — ~0.75 s
-    of eager plan re-analysis per rebuild); when absent it is built
+    frame (the entry module memoizes that shared chain, about 0.12 s of
+    plan construction per rebuild at sf0.01); when absent it is built
     inline, identical plan."""
-    w = Window.partitionBy(partition_col).orderBy(order_col)
-    w52 = w.rowsBetween(-251, 0)
+    w52 = (
+        f"PARTITION BY `{partition_col}` ORDER BY `{order_col}`"
+        " ROWS BETWEEN 251 PRECEDING AND CURRENT ROW"
+    )
 
     if enriched is None:
         enriched = rolling_indicators(
@@ -96,32 +97,22 @@ def stock_performance(
             order_col,
         )
 
+    range_pct = null_if_zero_divide_sql("close_price - low_52w", "high_52w - low_52w")
     out = (
-        enriched.withColumns(
-            {
-                "high_52w": F.max("high_price").over(w52),
-                "low_52w": F.min("low_price").over(w52),
-            }
+        enriched.selectExpr(
+            "*",
+            f"max(high_price) OVER ({w52}) AS high_52w",
+            f"min(low_price) OVER ({w52}) AS low_52w",
         )
-        .withColumns(
-            {
-                "ma_signal_5_20": crossover_signal("sma_5d", "sma_20d"),
-                "ma_signal_10_50": crossover_signal("sma_10d", "sma_50d"),
-                "is_high_volume_day": F.when(
-                    F.col("volume_vs_avg_20d") >= 2.0, F.lit(True)
-                ).otherwise(F.lit(False)),
-                "rsi_signal": F.when(F.col("rsi_14") >= 70, F.lit("OVERBOUGHT"))
-                .when(F.col("rsi_14") <= 30, F.lit("OVERSOLD"))
-                .otherwise(F.lit("NEUTRAL")),
-                "pct_of_52w_range": round_away(
-                    null_if_zero_divide(
-                        F.col("close_price") - F.col("low_52w"),
-                        F.col("high_52w") - F.col("low_52w"),
-                    )
-                    * 100,
-                    2,
-                ),
-            }
+        .selectExpr(
+            "*",
+            f"{crossover_signal_sql('sma_5d', 'sma_20d')} AS ma_signal_5_20",
+            f"{crossover_signal_sql('sma_10d', 'sma_50d')} AS ma_signal_10_50",
+            "CASE WHEN volume_vs_avg_20d >= 2.0D THEN true ELSE false END"
+            " AS is_high_volume_day",
+            "CASE WHEN rsi_14 >= 70 THEN 'OVERBOUGHT' WHEN rsi_14 <= 30 THEN 'OVERSOLD'"
+            " ELSE 'NEUTRAL' END AS rsi_signal",
+            f"{round_away_sql(f'{range_pct} * 100', 2)} AS pct_of_52w_range",
         )
         .select(*PERFORMANCE_COLUMNS)
     )

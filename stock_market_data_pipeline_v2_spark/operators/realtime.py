@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.core import round_away
+from ..functions.core import round_away, round_away_sql
 
 from .joins import interval_left_join, interval_left_join_range
 
@@ -54,25 +54,29 @@ def window_aggregate(ticks: DataFrame, duration: str = "15 minutes") -> DataFram
     ``price_sum``/``price_cnt`` ride along so a coarser grain can be
     re-aggregated without rescanning (see :func:`windowed_analytics`).
     """
-    win = F.window("event_time", duration)
     return (
-        ticks.groupBy("symbol", win.alias("window"))
+        ticks.groupBy("symbol", F.expr(f"window(event_time, '{duration}') AS `window`"))
         .agg(
-            F.avg("price").alias("ma_raw"),
-            F.stddev_samp("price").alias("vol_raw"),
-            F.sum("volume").alias("volume_sum"),
-            F.sum("price").alias("price_sum"),
-            F.count("price").alias("price_cnt"),
+            *map(
+                F.expr,
+                (
+                    "avg(price) AS ma_raw",
+                    "stddev_samp(price) AS vol_raw",
+                    "sum(volume) AS volume_sum",
+                    "sum(price) AS price_sum",
+                    "count(price) AS price_cnt",
+                ),
+            )
         )
-        .select(
+        .selectExpr(
             "symbol",
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            F.col("ma_raw"),
-            F.col("vol_raw"),
-            F.col("volume_sum"),
-            F.col("price_sum"),
-            F.col("price_cnt"),
+            "`window`.start AS window_start",
+            "`window`.end AS window_end",
+            "ma_raw",
+            "vol_raw",
+            "volume_sum",
+            "price_sum",
+            "price_cnt",
         )
     )
 
@@ -131,24 +135,25 @@ def windowed_analytics(
     else:
         agg1h = (
             window_aggregate(ticks, "1 hour")
-            .select("symbol", F.col("window_start").alias("window_start_1h"), "ma_raw")
+            .selectExpr("symbol", "window_start AS window_start_1h", "ma_raw")
             .withColumnRenamed("ma_raw", "ma_1h_raw")
         )
         join_fn = interval_left_join if strategy == "interval_join" else interval_left_join_range
         out = join_fn(
             agg15, agg1h, ["symbol"], "window_start", "window_start_1h", "1 hour"
         )
-    ma_15 = round_away("ma_raw", 6) if rounded else F.col("ma_raw")
-    vol_15 = round_away("vol_raw", 6) if rounded else F.col("vol_raw")
-    ma_1h = round_away("ma_1h_raw", 6) if rounded else F.col("ma_1h_raw")
-    return out.select(
+
+    def rnd(col: str) -> str:
+        return round_away_sql(col, 6) if rounded else col
+
+    return out.selectExpr(
         "symbol",
         "window_start",
         "window_end",
-        ma_15.alias("ma_15m"),
-        vol_15.alias("volatility_15m"),
-        F.col("volume_sum").alias("volume_sum_15m"),
-        ma_1h.alias("ma_1h"),
+        f"{rnd('ma_raw')} AS ma_15m",
+        f"{rnd('vol_raw')} AS volatility_15m",
+        "volume_sum AS volume_sum_15m",
+        f"{rnd('ma_1h_raw')} AS ma_1h",
     )
 
 
@@ -191,28 +196,24 @@ def stage_realtime(analytics: DataFrame, retention_days: int | None = None) -> D
     2024, so a wall-clock-relative filter would empty it.
     """
     out = (
-        analytics.select(
+        analytics.selectExpr(
             "symbol",
-            F.col("window_start").alias("window_start_at"),
-            F.col("window_end").alias("window_end_at"),
-            (
-                (F.unix_timestamp("window_end") - F.unix_timestamp("window_start")) / 60
-            )
-            .cast("long")
-            .alias("window_duration_minutes"),
+            "window_start AS window_start_at",
+            "window_end AS window_end_at",
+            "CAST((unix_timestamp(window_end) - unix_timestamp(window_start)) / 60 AS BIGINT)"
+            " AS window_duration_minutes",
             "ma_15m",
             "ma_1h",
             "volatility_15m",
-            F.col("volume_sum_15m").alias("volume_15m"),
+            "volume_sum_15m AS volume_15m",
         )
-        .filter(F.col("symbol").isNotNull())
-        .filter(F.col("window_start_at").isNotNull() & F.col("window_end_at").isNotNull())
-        .filter(F.col("window_start_at") < F.col("window_end_at"))
+        .filter("symbol IS NOT NULL")
+        .filter("window_start_at IS NOT NULL AND window_end_at IS NOT NULL")
+        .filter("window_start_at < window_end_at")
     )
     if retention_days is not None:
         out = out.filter(
-            F.col("window_start_at")
-            >= F.current_timestamp() - F.expr(f"INTERVAL {retention_days} DAYS")
+            f"window_start_at >= current_timestamp() - INTERVAL {retention_days} DAYS"
         )
     return out
 
@@ -220,49 +221,42 @@ def stage_realtime(analytics: DataFrame, retention_days: int | None = None) -> D
 def enrich_realtime(staged: DataFrame) -> DataFrame:
     """``int_realtime_enriched.sql:26-104`` parity: W8 lags, W9
     trailing 4-window averages, C1-C3 signals."""
-    w = Window.partitionBy("symbol").orderBy("window_start_at")
-    w4 = w.rowsBetween(-3, 0)
+    w = "PARTITION BY symbol ORDER BY window_start_at"
+    w4 = f"{w} ROWS BETWEEN 3 PRECEDING AND CURRENT ROW"
     # each window aggregate projected once; round_away reads its
     # argument three times (PERF.md lesson 10)
-    with_deltas = staged.select(
+    with_deltas = staged.selectExpr(
         "*",
-        F.lag("ma_15m").over(w).alias("__prev_ma_15m"),
-        F.lag("ma_1h").over(w).alias("__prev_ma_1h"),
-        F.avg("volume_15m").over(w4).alias("__avg_vol_1h"),
-        F.avg("volatility_15m").over(w4).alias("__avg_volat_1h"),
-    ).select(
-        *staged.columns,
-        round_away(F.col("ma_15m") - F.col("__prev_ma_15m"), 4).alias("ma_15m_delta"),
-        round_away(F.col("ma_1h") - F.col("__prev_ma_1h"), 4).alias("ma_1h_delta"),
-        round_away(F.col("ma_15m") - F.col("ma_1h"), 4).alias("ma_spread"),
-        round_away("__avg_vol_1h", 0).alias("avg_volume_1h"),
-        round_away("__avg_volat_1h", 4).alias("avg_volatility_1h"),
+        f"lag(ma_15m) OVER ({w}) AS __prev_ma_15m",
+        f"lag(ma_1h) OVER ({w}) AS __prev_ma_1h",
+        f"avg(volume_15m) OVER ({w4}) AS __avg_vol_1h",
+        f"avg(volatility_15m) OVER ({w4}) AS __avg_volat_1h",
+    ).selectExpr(
+        *(f"`{c}`" for c in staged.columns),
+        f"{round_away_sql('ma_15m - __prev_ma_15m', 4)} AS ma_15m_delta",
+        f"{round_away_sql('ma_1h - __prev_ma_1h', 4)} AS ma_1h_delta",
+        f"{round_away_sql('ma_15m - ma_1h', 4)} AS ma_spread",
+        f"{round_away_sql('__avg_vol_1h', 0)} AS avg_volume_1h",
+        f"{round_away_sql('__avg_volat_1h', 4)} AS avg_volatility_1h",
     )
-    return with_deltas.select(
+    return with_deltas.selectExpr(
         "*",
-        F.when((F.col("ma_spread") > 0) & (F.col("ma_15m_delta") > 0), "BULLISH")
-        .when((F.col("ma_spread") < 0) & (F.col("ma_15m_delta") < 0), "BEARISH")
-        .otherwise("NEUTRAL")
-        .alias("momentum_signal"),
-        F.when(F.col("volatility_15m") >= F.col("avg_volatility_1h") * 2.0, "HIGH")
-        .when(F.col("volatility_15m") >= F.col("avg_volatility_1h") * 1.5, "ELEVATED")
-        .when(F.col("volatility_15m") <= F.col("avg_volatility_1h") * 0.5, "LOW")
-        .otherwise("NORMAL")
-        .alias("volatility_regime"),
-        F.when(
-            (F.col("avg_volume_1h") > 0)
-            & (F.col("volume_15m") >= F.col("avg_volume_1h") * 2.0),
-            F.lit(True),
-        )
-        .otherwise(F.lit(False))
-        .alias("is_volume_spike"),
+        "CASE WHEN ma_spread > 0 AND ma_15m_delta > 0 THEN 'BULLISH'"
+        " WHEN ma_spread < 0 AND ma_15m_delta < 0 THEN 'BEARISH'"
+        " ELSE 'NEUTRAL' END AS momentum_signal",
+        "CASE WHEN volatility_15m >= avg_volatility_1h * 2.0D THEN 'HIGH'"
+        " WHEN volatility_15m >= avg_volatility_1h * 1.5D THEN 'ELEVATED'"
+        " WHEN volatility_15m <= avg_volatility_1h * 0.5D THEN 'LOW'"
+        " ELSE 'NORMAL' END AS volatility_regime",
+        "CASE WHEN avg_volume_1h > 0 AND volume_15m >= avg_volume_1h * 2.0D"
+        " THEN true ELSE false END AS is_volume_spike",
     )
 
 
 def realtime_signals(enriched: DataFrame) -> DataFrame:
     """``mart_realtime_signals.sql:22-68`` parity: C8 alert + C9
     summary string (audit timestamps omitted — wall-clock)."""
-    return enriched.select(
+    return enriched.selectExpr(
         "symbol",
         "window_start_at",
         "window_end_at",
@@ -279,21 +273,11 @@ def realtime_signals(enriched: DataFrame) -> DataFrame:
         "volume_15m",
         "avg_volume_1h",
         "is_volume_spike",
-        (
-            (F.col("momentum_signal") != "NEUTRAL")
-            & F.col("volatility_regime").isin("ELEVATED", "HIGH")
-            & F.col("is_volume_spike")
-        ).alias("is_multi_signal_alert"),
-        F.concat(
-            F.col("symbol"),
-            F.lit(" | "),
-            F.col("momentum_signal"),
-            F.lit(" | Vol: "),
-            F.col("volatility_regime"),
-            F.when(F.col("is_volume_spike"), F.lit(" | VOLUME SPIKE")).otherwise(F.lit("")),
-            F.lit(" @ "),
-            F.date_format("window_start_at", "yyyy-MM-dd HH:mm"),
-        ).alias("signal_summary"),
+        "momentum_signal != 'NEUTRAL' AND volatility_regime IN ('ELEVATED', 'HIGH')"
+        " AND is_volume_spike AS is_multi_signal_alert",
+        "concat(symbol, ' | ', momentum_signal, ' | Vol: ', volatility_regime,"
+        " CASE WHEN is_volume_spike THEN ' | VOLUME SPIKE' ELSE '' END, ' @ ',"
+        " date_format(window_start_at, 'yyyy-MM-dd HH:mm')) AS signal_summary",
     )
 
 

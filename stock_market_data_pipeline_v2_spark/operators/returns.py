@@ -25,31 +25,26 @@ per-key data is a time series that fits a partition.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from ..functions.core import null_if_zero_divide, round_away
+from ..functions.core import null_if_zero_divide_sql, round_away_sql
 
 
 def daily_returns(bars: DataFrame, partition_col: str = "symbol", order_col: str = "trade_date") -> DataFrame:
-    w = Window.partitionBy(partition_col).orderBy(order_col)
-    prev_close = F.col("prev_close_price")
-    return bars.select(
+    w = f"PARTITION BY `{partition_col}` ORDER BY `{order_col}`"
+    prev = "prev_close_price"
+    ret = null_if_zero_divide_sql(f"close_price - {prev}", prev)
+    range_pct = null_if_zero_divide_sql("high_price - low_price", "close_price")
+    return bars.selectExpr(
         "*",
-        F.lag("close_price").over(w).alias("prev_close_price"),
-        F.row_number().over(w).cast("long").alias("symbol_row_num"),
-    ).select(
-        *bars.columns,
-        prev_close,
-        round_away(
-            null_if_zero_divide(F.col("close_price") - prev_close, prev_close) * 100, 4
-        ).alias("daily_return_pct"),
-        round_away(F.col("high_price") - F.col("low_price"), 4).alias("intraday_range"),
-        round_away(
-            null_if_zero_divide(F.col("high_price") - F.col("low_price"), F.col("close_price"))
-            * 100,
-            4,
-        ).alias("intraday_range_pct"),
-        round_away(F.col("open_price") - prev_close, 4).alias("overnight_gap"),
+        f"lag(close_price) OVER ({w}) AS {prev}",
+        f"CAST(row_number() OVER ({w}) AS BIGINT) AS symbol_row_num",
+    ).selectExpr(
+        *(f"`{c}`" for c in bars.columns),
+        prev,
+        f"{round_away_sql(f'{ret} * 100', 4)} AS daily_return_pct",
+        f"{round_away_sql('high_price - low_price', 4)} AS intraday_range",
+        f"{round_away_sql(f'{range_pct} * 100', 4)} AS intraday_range_pct",
+        f"{round_away_sql(f'open_price - {prev}', 4)} AS overnight_gap",
         "symbol_row_num",
     )

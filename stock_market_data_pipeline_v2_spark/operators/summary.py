@@ -23,53 +23,50 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.core import null_if_zero_divide, round_away
+from ..functions.core import null_if_zero_divide_sql, round_away_sql
 
 
 def daily_summary(performance: DataFrame, date_col: str = "trade_date") -> DataFrame:
-    ret = F.col("daily_return_pct")
-    n_symbols = F.count_distinct(F.col("symbol"))
+    ret = "daily_return_pct"
+    # Composite ordering key for top_gainer/top_loser: two symbols
+    # tying on the 4dp-rounded return would otherwise make the argmax
+    # nondeterministic (struct compares ret first, then symbol). The
+    # key is NULLed for null returns so both engines skip those rows
+    # identically — a bare struct key would rank a null field smallest
+    # in Spark but LARGEST in DuckDB's struct max (verified
+    # empirically).
+    key = f"CASE WHEN {ret} IS NOT NULL THEN struct({ret}, symbol) END"
+    ad_ratio = null_if_zero_divide_sql(f"count_if({ret} > 0)", "count(DISTINCT symbol)")
     return (
         performance.groupBy(date_col)
         .agg(
-            n_symbols.alias("symbols_tracked"),
-            F.count_if(ret > 0).alias("advancers"),
-            F.count_if(ret < 0).alias("decliners"),
-            F.count_if(ret == 0).alias("unchanged"),
-            round_away(null_if_zero_divide(F.count_if(ret > 0), n_symbols) * 100, 1).alias(
-                "advance_decline_ratio_pct"
-            ),
-            round_away(F.avg(ret), 4).alias("avg_return_pct"),
-            round_away(F.median(ret), 4).alias("median_return_pct"),
-            round_away(F.stddev_samp(ret), 4).alias("return_stddev"),
-            F.max(ret).alias("best_return_pct"),
-            F.min(ret).alias("worst_return_pct"),
-            # Composite ordering key: two symbols tying on the 4dp-
-            # rounded return would otherwise make the argmax
-            # nondeterministic (struct compares ret first, then
-            # symbol). The key is NULLed for null returns so both
-            # engines skip those rows identically — a bare struct key
-            # would rank a null field smallest in Spark but LARGEST in
-            # DuckDB's struct max (verified empirically).
-            F.max_by(
-                "symbol", F.when(ret.isNotNull(), F.struct(ret, F.col("symbol")))
-            ).alias("top_gainer_symbol"),
-            F.min_by(
-                "symbol", F.when(ret.isNotNull(), F.struct(ret, F.col("symbol")))
-            ).alias("top_loser_symbol"),
-            F.sum("volume").alias("total_volume"),
-            round_away(F.avg("volume_vs_avg_20d"), 4).alias("avg_volume_vs_norm"),
-            F.count_if(F.col("is_high_volume_day")).alias("high_volume_stocks"),
-            round_away(F.avg("annualised_volatility_pct"), 2).alias("avg_annualised_vol_pct"),
-            round_away(F.avg("intraday_range_pct"), 4).alias("avg_intraday_range_pct"),
-            F.count_if(F.col("rsi_signal") == "OVERBOUGHT").alias("overbought_count"),
-            F.count_if(F.col("rsi_signal") == "OVERSOLD").alias("oversold_count"),
-            F.count_if(F.col("ma_signal_5_20") == "GOLDEN_CROSS").alias(
-                "golden_cross_5_20_count"
-            ),
-            F.count_if(F.col("ma_signal_5_20") == "DEATH_CROSS").alias(
-                "death_cross_5_20_count"
-            ),
+            *map(
+                F.expr,
+                (
+                    "count(DISTINCT symbol) AS symbols_tracked",
+                    f"count_if({ret} > 0) AS advancers",
+                    f"count_if({ret} < 0) AS decliners",
+                    f"count_if({ret} = 0) AS unchanged",
+                    f"{round_away_sql(f'{ad_ratio} * 100', 1)} AS advance_decline_ratio_pct",
+                    f"{round_away_sql(f'avg({ret})', 4)} AS avg_return_pct",
+                    f"{round_away_sql(f'median({ret})', 4)} AS median_return_pct",
+                    f"{round_away_sql(f'stddev_samp({ret})', 4)} AS return_stddev",
+                    f"max({ret}) AS best_return_pct",
+                    f"min({ret}) AS worst_return_pct",
+                    f"max_by(symbol, {key}) AS top_gainer_symbol",
+                    f"min_by(symbol, {key}) AS top_loser_symbol",
+                    "sum(volume) AS total_volume",
+                    f"{round_away_sql('avg(volume_vs_avg_20d)', 4)} AS avg_volume_vs_norm",
+                    "count_if(is_high_volume_day) AS high_volume_stocks",
+                    f"{round_away_sql('avg(annualised_volatility_pct)', 2)}"
+                    " AS avg_annualised_vol_pct",
+                    f"{round_away_sql('avg(intraday_range_pct)', 4)} AS avg_intraday_range_pct",
+                    "count_if(rsi_signal = 'OVERBOUGHT') AS overbought_count",
+                    "count_if(rsi_signal = 'OVERSOLD') AS oversold_count",
+                    "count_if(ma_signal_5_20 = 'GOLDEN_CROSS') AS golden_cross_5_20_count",
+                    "count_if(ma_signal_5_20 = 'DEATH_CROSS') AS death_cross_5_20_count",
+                ),
+            )
         )
         .orderBy(F.desc(date_col))
     )

@@ -17,8 +17,11 @@ bakes in the settings every operator here relies on:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
+import threading
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -71,7 +74,44 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
         "spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     )
+    # Whole-stage codegen writes the stage id into each generated class
+    # name, and the id comes from a per-build counter, so a second build
+    # of the same plan yields new source text that misses the compiled-
+    # class cache (keyed by that text) and compiles again (PERF.md
+    # lesson 11). Without the id the source depends on the plan alone.
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
     return spark
+
+
+class RoundTrips:
+    """The running count ``n`` of py4j commands sent inside
+    :func:`count_round_trips`."""
+
+    n = 0
+
+
+@contextlib.contextmanager
+def count_round_trips() -> Iterator[RoundTrips]:
+    """Count the py4j commands the calling thread sends to the JVM inside
+    the block. Building a plan through the Column API costs one per node
+    and per JVM lookup, so this is the plan-construction cost of a
+    builder (PERF.md lesson 12). Other threads are left out: py4j's
+    finalizer thread frees collected objects' JVM sides in bursts."""
+    from py4j.java_gateway import GatewayClient
+
+    counter, send = RoundTrips(), GatewayClient.send_command
+    caller = threading.get_ident()
+
+    def counting(client, *args, **kwargs):  # type: ignore[no-untyped-def]
+        if threading.get_ident() == caller:
+            counter.n += 1
+        return send(client, *args, **kwargs)
+
+    GatewayClient.send_command = counting
+    try:
+        yield counter
+    finally:
+        GatewayClient.send_command = send
 
 
 def driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -111,6 +151,13 @@ def get_spark(
     cycle 112; at 256 both recompile none. 256 is over 1.5x the larger
     set because Guava's segmented cache evicts before its nominal size;
     a larger cap would only keep more of a long suite's classes loaded.
+
+    The cache only helps a plan built again if its generated source is
+    the same text, so ``configure_runtime`` (applied here and by every
+    registered query) also sets ``spark.sql.codegen.useIdInClassName``
+    to false: with the per-build stage id in each class name, a second
+    build of ``bloom_daily_rollup`` recompiled 16-18 classes, and none
+    without it.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")

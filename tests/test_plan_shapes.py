@@ -663,3 +663,24 @@ def test_round9_gap_report_single_window_lineage(spark):
     physical = plan.split("== Physical Plan ==")[-1]
     assert physical.count("Exchange hashpartitioning") == 1
     assert physical.count("FileScan parquet") == 1
+
+
+def test_plan_dump_masks_the_date_current_date_folds_to():
+    """``trade_date <= current_date()`` plans as a scan bound at the next
+    UTC midnight, so a dump taken another day would differ in every
+    ``clean_bars`` consumer; ``tools/plan_dump.py`` masks both spellings
+    of that date and leaves the data's own dates alone."""
+    import datetime as dt
+
+    from tools.plan_dump import mask
+
+    line = (
+        "+- Filter (isnotnull(ts#123) AND (ts#123 < 2026-10-20 00:00:00)) "
+        "PushedFilters: [LessThan(ts,2026-10-20T00:00)], "
+        "PartitionFilters: [(trade_date#7 >= 2024-01-02)]"
+    )
+    assert mask(line, today=dt.date(2026, 10, 19)) == (
+        "+- Filter (isnotnull(ts#N) AND (ts#N < <tomorrow> 00:00:00)) "
+        "PushedFilters: [LessThan(ts,<tomorrow>T00:00)], "
+        "PartitionFilters: [(trade_date#N >= 2024-01-02)]"
+    )

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
@@ -155,24 +156,62 @@ def test_round_away_matches_duckdb_exactly(spark, values, scale):
     """The exactness keystone, property-tested: functions/core.py:
     round_away must agree bit-for-bit with DuckDB's round() on
     arbitrary doubles and scales — every oracle-gated money/ratio
-    column rests on this."""
+    column rests on this. Its SQL-text form is checked the same way."""
     import duckdb
 
-    from stock_market_data_pipeline_v2_spark.functions.core import round_away
+    from stock_market_data_pipeline_v2_spark.functions.core import (
+        round_away,
+        round_away_sql,
+    )
 
     df = spark.createDataFrame([Row(i=i, x=float(v)) for i, v in enumerate(values)])
-    got = {
-        r.i: r.y
-        for r in df.select("i", round_away(F.col("x"), scale).alias("y")).collect()
-    }
+    rows = df.select(
+        "i",
+        round_away(F.col("x"), scale).alias("y"),
+        F.expr(round_away_sql("x", scale)).alias("z"),
+    ).collect()
     con = duckdb.connect()
     con.execute("CREATE TABLE t (i BIGINT, x DOUBLE)")
     con.executemany("INSERT INTO t VALUES (?, ?)", [(i, float(v)) for i, v in enumerate(values)])
     expect = dict(con.execute(f"SELECT i, round(x, {scale}) FROM t").fetchall())
-    for i in got:
-        assert got[i] == expect[i] or (
-            got[i] != got[i] and expect[i] != expect[i]
-        ), (values[i], scale, got[i], expect[i])
+    for r in rows:
+        for got in (r.y, r.z):
+            assert got == expect[r.i] or (
+                got != got and expect[r.i] != expect[r.i]
+            ), (values[r.i], scale, got, expect[r.i])
+
+
+@pytest.mark.parametrize("digits", range(7))
+def test_round_away_sql_is_the_column_expression(spark, digits):
+    """Each helper's SQL text parses to the expression tree its Column
+    form builds, operand order included, so swapping one spelling for the
+    other leaves every plan as it was (PERF.md lesson 12)."""
+    from stock_market_data_pipeline_v2_spark.functions.core import (
+        null_if_zero_divide,
+        null_if_zero_divide_sql,
+        round_away,
+        round_away_sql,
+    )
+
+    df = spark.createDataFrame([(1.5, -2.0)], "x double, y double")
+
+    def analyzed(col):
+        plan = df.select(col.alias("o"))._jdf.queryExecution().analyzed()
+        return plan.expressions().head().child()
+
+    x, y = F.col("x"), F.col("y")
+    pairs = [
+        (round_away(x, digits), round_away_sql("x", digits)),
+        (
+            round_away(null_if_zero_divide(x - y, y) * 100, digits),
+            round_away_sql(f"{null_if_zero_divide_sql('x - y', 'y')} * 100", digits),
+        ),
+        (null_if_zero_divide(x, y * 2.0), null_if_zero_divide_sql("x", "y * 2.0D")),
+    ]
+    for column, sql in pairs:
+        want, got = analyzed(column), analyzed(F.expr(sql))
+        assert want.semanticEquals(got), (want.toString(), got.toString())
+        assert want.toString() == got.toString()
 
 
 def test_rows_only_queries_are_deterministic(spark):

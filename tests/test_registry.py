@@ -147,3 +147,32 @@ def test_bench_headline_is_the_registry_minus_not_headline():
     qs = m.queries()
     assert set(bench.NOT_HEADLINE) <= set(qs)
     assert len([n for n in qs if n not in bench.NOT_HEADLINE]) == 189
+
+
+# Round trips of one warm registered build at sf0.01. Built from SQL
+# text they take 237, 126, 42 and 58; composed through the Column API
+# they took 3,037, 1,427, 753 and 466.
+MART_ROUND_TRIP_BOUNDS = {
+    "realtime_signals": 600,
+    "daily_summary": 250,
+    "bollinger_bands": 150,
+    "daily_vwap": 150,
+}
+
+
+def test_mart_builds_take_few_round_trips(spark):
+    """The mart reads that build their plan on every call write each
+    projection and aggregate list as SQL text, parsed in one call, not
+    composed node by node over py4j (PERF.md lesson 12)."""
+    import __spark_entry__ as m
+    from stock_market_data_pipeline_v2_spark.session import count_round_trips
+
+    qs = m.queries()
+    sf_dir = "/root/testdata/sf0.01"
+    counts = {}
+    for name in MART_ROUND_TRIP_BOUNDS:
+        qs[name](spark, sf_dir)  # builds the memo entries it reads
+        with count_round_trips() as rt:
+            qs[name](spark, sf_dir)
+        counts[name] = rt.n
+    assert all(counts[n] <= b for n, b in MART_ROUND_TRIP_BOUNDS.items()), counts

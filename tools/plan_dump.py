@@ -9,9 +9,13 @@ Plan ==`` section Spark plans for it before execution is written under a
 the numbered names of higher-order-function lambda variables
 (``lambda x_25`` -> ``lambda x_N``: like expression ids they come from a
 session-wide counter, so they move with the order in which plans were
-built), the txn demo tables' temp dirs (and the files under them), and
-the checkout path. A refactor that should leave every plan alone is checked
-by diffing the dump of the parent against the dump of the change.
+built), the txn demo tables' temp dirs (and the files under them), the
+checkout path, and the date that ``current_date()`` folds to (the
+bar filter ``trade_date <= current_date()`` plans as ``ts < <tomorrow>
+00:00:00``, so two dumps taken on different UTC days would differ in
+every ``clean_bars`` consumer). A refactor that should leave every plan
+alone is checked by diffing the dump of the parent against the dump of
+the change.
 
 Usage: python tools/plan_dump.py [--sf DIR] [--out FILE] [query ...]
 (``SPARK_GRAFT_CPUS`` sets the session's cores, as for every tool.)
@@ -20,6 +24,7 @@ Usage: python tools/plan_dump.py [--sf DIR] [--out FILE] [query ...]
 from __future__ import annotations
 
 import argparse
+import datetime as dt
 import re
 import sys
 from pathlib import Path
@@ -35,6 +40,18 @@ _MASKS = (
 )
 
 
+def mask(text: str, today: dt.date | None = None) -> str:
+    """``text`` with the volatile parts above replaced; ``today`` is the
+    session's (UTC) date, now by default."""
+    today = today or dt.datetime.now(dt.timezone.utc).date()
+    text = text.replace(str(REPO), "<repo>")
+    for pattern, repl in _MASKS:
+        text = pattern.sub(repl, text)
+    for day, label in ((today, "<today>"), (today + dt.timedelta(days=1), "<tomorrow>")):
+        text = text.replace(day.isoformat(), label)
+    return text
+
+
 def physical_plan(df) -> str:
     """The masked ``== Physical Plan ==`` section planned for ``df``
     before execution (an executed frame would also print AQE's final
@@ -44,10 +61,7 @@ def physical_plan(df) -> str:
         df._jdf.queryExecution().logical(), execution.CommandExecutionMode.ALL()
     )
     text = jqe.explainString(execution.ExplainMode.fromString("simple"))
-    text = text[text.index("== Physical Plan =="):].replace(str(REPO), "<repo>")
-    for pattern, repl in _MASKS:
-        text = pattern.sub(repl, text)
-    return text.rstrip() + "\n"
+    return mask(text[text.index("== Physical Plan =="):]).rstrip() + "\n"
 
 
 def main() -> int:
