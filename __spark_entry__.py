@@ -22,6 +22,7 @@ from stock_market_data_pipeline_v2_spark import oracles
 from stock_market_data_pipeline_v2_spark.session import configure_runtime
 from stock_market_data_pipeline_v2_spark.schemas import TESTDATA_TABLES
 from stock_market_data_pipeline_v2_spark.sources.io import load_table, memo
+from stock_market_data_pipeline_v2_spark.sources.txn_table import TxnTable
 from stock_market_data_pipeline_v2_spark.operators.bars import (
     bars_from_events,
     daily_vwap,
@@ -1844,34 +1845,32 @@ def q_hard_negative_ivf(embeddings: DataFrame, ivf_index: IvfIndex) -> DataFrame
     )
 
 
-# The txn demo tables are build-once/query-many (the ivf_index
-# pattern): each lineage is committed once per (applicationId, sf_dir)
-# into its own temp dir; txn_merge_upsert reads the demo table's
-# latest snapshot, txn_time_travel its pinned mid-lineage version, and
-# txn_stream_sink, txn_delete and txn_schema_evolution drive their own
+# The txn lineages are derived inputs (the ivf_index pattern): each
+# d_txn_* commits one TxnTable lineage from the events table into its own
+# temp dir, once per (applicationId, sf_dir). txn_merge_upsert reads the
+# demo table's latest snapshot, txn_time_travel its pinned mid-lineage
+# version and txn_pruned_read a zone-map-pruned range of it;
+# txn_stream_sink, txn_delete and txn_schema_evolution read their own
 # tables.
-def _txn_table(spark: SparkSession, sf_dir: str, name: str, build):
-    """The memoized TxnTable ``name``: ``build(root)`` commits its
-    lineage under a fresh temp dir that is removed at exit."""
-
-    def make():
-        root = tempfile.mkdtemp(prefix=f"spark_graft_{name}_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        return build(root)
-
-    return memo(spark, sf_dir, name, make)
+_TXN_COLS = ("user_id", "event_type", "ts", "event_id", "value")
 
 
-def _txn_events(spark: SparkSession, sf_dir: str):
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", "ts", "event_id", "value"
+def _txn_root(name: str) -> str:
+    """A fresh temp dir for the lineage ``name``, removed at exit."""
+    root = tempfile.mkdtemp(prefix=f"spark_graft_{name}_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _txn_cuts():
+    """The two ``ts`` cutoffs the lineages split ``events`` at."""
+    return (
+        F.lit("2024-01-12").cast("timestamp"),
+        F.lit("2024-01-20").cast("timestamp"),
     )
-    c1 = F.lit("2024-01-12").cast("timestamp")
-    c2 = F.lit("2024-01-20").cast("timestamp")
-    return events, c1, c2
 
 
-def _txn_demo_table(spark: SparkSession, sf_dir: str):
+def d_txn_demo(spark: SparkSession, events: DataFrame) -> TxnTable:
     # r11 lineage (fixes VERDICT r10 "What's wrong" #1): v1 = create
     # from RAW pre-cutoff events — NOT key-unique on (user_id,
     # event_type), so no uniqueness claim is recorded and the first
@@ -1881,46 +1880,124 @@ def _txn_demo_table(spark: SparkSession, sf_dir: str):
     # into range-disjoint user_id files — what lets a zone map skip
     # anything at all. v4 = the second merge, now genuinely
     # SELECTIVE against a provably key-unique, clustered parent.
-    from stock_market_data_pipeline_v2_spark.sources.txn_table import (
-        TxnTable,
+    events = events.select(*_TXN_COLS)
+    c1, c2 = _txn_cuts()
+    t = TxnTable.create(
+        spark,
+        _txn_root("txn_demo"),
+        events.filter(F.col("ts") < c1),
+        zone_map_col="user_id",
     )
-
-    def build(root):
-        events, c1, c2 = _txn_events(spark, sf_dir)
-        t = TxnTable.create(
-            spark,
-            root,
-            events.filter(F.col("ts") < c1),
-            zone_map_col="user_id",
-        )
-        t.merge(
-            spark,
-            events.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
-            keys=["user_id", "event_type"],
-            version_col="ts",
-            tiebreak_cols=["event_id"],
-            zone_map_col="user_id",
-        )
-        t.optimize(spark, cluster_col="user_id", n_files=8)
-        t.merge(
-            spark,
-            events.filter(F.col("ts") >= c2),
-            keys=["user_id", "event_type"],
-            version_col="ts",
-            tiebreak_cols=["event_id"],
-            zone_map_col="user_id",
-        )
-        # v5: post-merge maintenance optimize — restores the
-        # range-disjoint layout (the gate batches span the whole
-        # user domain, so merge 4's rewrite is hash-shaped), which
-        # is what makes txn_pruned_read's file skipping genuine.
-        t.optimize(spark, cluster_col="user_id", n_files=8)
-        return t
-
-    return _txn_table(spark, sf_dir, "txn_demo", build)
+    t.merge(
+        spark,
+        events.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
+        keys=["user_id", "event_type"],
+        version_col="ts",
+        tiebreak_cols=["event_id"],
+        zone_map_col="user_id",
+    )
+    t.optimize(spark, cluster_col="user_id", n_files=8)
+    t.merge(
+        spark,
+        events.filter(F.col("ts") >= c2),
+        keys=["user_id", "event_type"],
+        version_col="ts",
+        tiebreak_cols=["event_id"],
+        zone_map_col="user_id",
+    )
+    # v5: post-merge maintenance optimize — restores the
+    # range-disjoint layout (the gate batches span the whole
+    # user domain, so merge 4's rewrite is hash-shaped), which
+    # is what makes txn_pruned_read's file skipping genuine.
+    t.optimize(spark, cluster_col="user_id", n_files=8)
+    return t
 
 
-def q_txn_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+def d_txn_sink(spark: SparkSession, events: DataFrame) -> TxnTable:
+    # three ts-partitioned micro-batches committed through
+    # commit_stream_batch (per-app txn watermark in the manifest,
+    # Delta's SetTransaction), then batch 1 REDELIVERED (the
+    # at-least-once replay Structured Streaming can produce after a
+    # checkpoint/sink crash window) and skipped.
+    events = events.select(*_TXN_COLS)
+    c1, c2 = _txn_cuts()
+    batches = [
+        events.filter(F.col("ts") < c1),
+        events.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
+        events.filter(F.col("ts") >= c2),
+    ]
+    t = TxnTable.create(spark, _txn_root("txn_sink"), batches[0].limit(0))
+    for bid, batch in enumerate(batches):
+        t.commit_stream_batch(spark, batch, "events_ingest", bid)
+    # the replay: same app + batch id → must be a no-op
+    replay = t.commit_stream_batch(spark, batches[1], "events_ingest", 1)
+    assert replay is None, "replayed micro-batch must be skipped"
+    return t
+
+
+def d_txn_delete(spark: SparkSession, events: DataFrame) -> TxnTable:
+    # r12 lineage (VERDICT r11 next-round #2/#3): v1 = raw create
+    # (duplicate keys, no claim) → v2 = empty-update merge, the
+    # dedup-to-latest-wins pass that establishes key_unique_on via
+    # the auto full-COW fallback → v3 = OPTIMIZE (range-disjoint
+    # user_id files) → v4 = genuinely SELECTIVE zone-mapped DELETE
+    # (GDPR-erasure shape: purchase rows of users 10–19) →
+    # expire_snapshots(keep_last=2) + vacuum(0): v1/v2 history
+    # dropped and their files reclaimed, the surviving snapshots
+    # exact.
+    events = events.select(*_TXN_COLS)
+    t = TxnTable.create(
+        spark, _txn_root("txn_delete"), events, zone_map_col="user_id"
+    )
+    t.merge(
+        spark,
+        events.limit(0),
+        keys=["user_id", "event_type"],
+        version_col="ts",
+        tiebreak_cols=["event_id"],
+        zone_map_col="user_id",
+    )
+    t.optimize(spark, cluster_col="user_id", n_files=8)
+    t.delete(
+        spark,
+        F.col("user_id").between(10, 19)
+        & (F.col("event_type") == "purchase"),
+        prune_col="user_id",
+        prune_lo=10,
+        prune_hi=19,
+    )
+    expired = t.expire_snapshots(keep_last=2)
+    reclaimed = t.vacuum(grace_seconds=0)
+    sys.stderr.write(
+        f"txn_delete: expired versions {expired}, "
+        f"reclaimed {reclaimed} files\n"
+    )
+    return t
+
+
+def d_txn_evolve(spark: SparkSession, events: DataFrame) -> TxnTable:
+    # round 12: v1 = create from pre-cutoff events, v2 = evolve-schema
+    # committing a widened schema (new nullable `tag` string) with ZERO
+    # data rewritten (same files, stats carried), v3 = append of the
+    # post-cutoff events WITH the new column populated.
+    events = events.select(*_TXN_COLS)
+    c1, _c2 = _txn_cuts()
+    t = TxnTable.create(
+        spark, _txn_root("txn_evolve"), events.filter(F.col("ts") < c1),
+        zone_map_col="user_id",
+    )
+    t.evolve_schema(spark, [("tag", "string")])
+    t.append(
+        spark,
+        events.filter(F.col("ts") >= c1).withColumn(
+            "tag", F.upper(F.col("event_type"))
+        ),
+        zone_map_col="user_id",
+    )
+    return t
+
+
+def q_txn_merge_upsert(spark: SparkSession, txn_demo: TxnTable) -> DataFrame:
     # round 10 (VERDICT r9 missing #2), re-based r11: merge_upsert's
     # semantics run THROUGH the transactional boundary
     # (sources/txn_table.py) — the final committed snapshot after
@@ -1931,26 +2008,20 @@ def q_txn_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows between files, so the oracle stays the single-window MERGE
     # SQL; isolation/conflict/vacuum/skip properties are pytest-gated
     # (tests/test_round10_ops.py, test_round11_ops.py).
-    t = _txn_demo_table(spark, sf_dir)
-    return t.read(spark).select(
-        "user_id", "event_type", "ts", "event_id", "value"
-    )
+    return txn_demo.read(spark).select(*_TXN_COLS)
 
 
-def q_txn_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_txn_time_travel(spark: SparkSession, txn_demo: TxnTable) -> DataFrame:
     # round 11: TIME TRAVEL made driver-visible — read the demo
     # table PINNED at version 2 (the state right after the first
     # merge, BEFORE optimize and the second merge rewrote the
     # files). Versioned manifests make the pinned snapshot
     # reproducible forever; the oracle is the same latest-wins MERGE
     # SQL restricted to the events that existed then (ts < c2).
-    t = _txn_demo_table(spark, sf_dir)
-    return t.read(spark, version=2).select(
-        "user_id", "event_type", "ts", "event_id", "value"
-    )
+    return txn_demo.read(spark, version=2).select(*_TXN_COLS)
 
 
-def q_txn_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_txn_pruned_read(spark: SparkSession, txn_demo: TxnTable) -> DataFrame:
     # round 11: manifest-level DATA SKIPPING made driver-visible —
     # read user_id ∈ [0, 9] off the demo table through the zone maps
     # (pure manifest arithmetic selects the files; the residual
@@ -1958,100 +2029,26 @@ def q_txn_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # post-merge optimize keeps the latest snapshot range-disjoint,
     # so the prune is asserted GENUINE (fewer files than the
     # manifest lists) at every SF, not conservative pass-through.
-    t = _txn_demo_table(spark, sf_dir)
     # soft-report, don't assert (ADVICE r11 #4): an unlucky future
     # layout where [0, 9] intersects every file would still return
     # the CORRECT unpruned result — the genuine-skip property itself
     # is pytest-gated (test_round11_ops.py).
-    kept, total = t.prune_files("user_id", 0, 9)
+    kept, total = txn_demo.prune_files("user_id", 0, 9)
     sys.stderr.write(f"txn_pruned_read: kept {len(kept)}/{total} files\n")
-    return t.read_pruned(spark, "user_id", 0, 9).select(
-        "user_id", "event_type", "ts", "event_id", "value"
-    )
+    return txn_demo.read_pruned(spark, "user_id", 0, 9).select(*_TXN_COLS)
 
 
-def q_txn_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_txn_stream_sink(spark: SparkSession, txn_sink: TxnTable) -> DataFrame:
     # round 11 (VERDICT r10 next-round #4): the idempotent streaming
-    # sink boundary, driver-visible as its batch twin — three
-    # ts-partitioned micro-batches committed through
-    # commit_stream_batch (per-app txn watermark in the manifest,
-    # Delta's SetTransaction), then batch 1 REDELIVERED (the
-    # at-least-once replay Structured Streaming can produce after a
-    # checkpoint/sink crash window) and skipped. The oracle is the
-    # plain events projection: a duplicated or dropped batch fails
-    # rows_match. The real readStream+foreachBatch path with a
-    # checkpoint restart is pytest-gated (test_round11_ops.py).
-    from stock_market_data_pipeline_v2_spark.sources.txn_table import (
-        TxnTable,
-    )
-
-    def build(root):
-        events, c1, c2 = _txn_events(spark, sf_dir)
-        batches = [
-            events.filter(F.col("ts") < c1),
-            events.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
-            events.filter(F.col("ts") >= c2),
-        ]
-        t = TxnTable.create(spark, root, batches[0].limit(0))
-        for bid, batch in enumerate(batches):
-            t.commit_stream_batch(spark, batch, "events_ingest", bid)
-        # the replay: same app + batch id → must be a no-op
-        replay = t.commit_stream_batch(spark, batches[1], "events_ingest", 1)
-        assert replay is None, "replayed micro-batch must be skipped"
-        return t
-
-    t = _txn_table(spark, sf_dir, "txn_sink", build)
-    return t.read(spark).select(
-        "user_id", "event_type", "ts", "event_id", "value"
-    )
+    # sink boundary, driver-visible as its batch twin (d_txn_sink).
+    # The oracle is the plain events projection: a duplicated or
+    # dropped batch fails rows_match. The real readStream+foreachBatch
+    # path with a checkpoint restart is pytest-gated
+    # (test_round11_ops.py).
+    return txn_sink.read(spark).select(*_TXN_COLS)
 
 
-def _txn_delete_table(spark: SparkSession, sf_dir: str):
-    # r12 lineage (VERDICT r11 next-round #2/#3): v1 = raw create
-    # (duplicate keys, no claim) → v2 = empty-update merge, the
-    # dedup-to-latest-wins pass that establishes key_unique_on via
-    # the auto full-COW fallback → v3 = OPTIMIZE (range-disjoint
-    # user_id files) → v4 = genuinely SELECTIVE zone-mapped DELETE
-    # (GDPR-erasure shape: purchase rows of users 10–19) →
-    # expire_snapshots(keep_last=2) + vacuum(0): v1/v2 history
-    # dropped and their files reclaimed, the surviving snapshots
-    # exact. Build-once/query-many like the other txn tables.
-    from stock_market_data_pipeline_v2_spark.sources.txn_table import (
-        TxnTable,
-    )
-
-    def build(root):
-        events, _c1, _c2 = _txn_events(spark, sf_dir)
-        t = TxnTable.create(spark, root, events, zone_map_col="user_id")
-        t.merge(
-            spark,
-            events.limit(0),
-            keys=["user_id", "event_type"],
-            version_col="ts",
-            tiebreak_cols=["event_id"],
-            zone_map_col="user_id",
-        )
-        t.optimize(spark, cluster_col="user_id", n_files=8)
-        t.delete(
-            spark,
-            F.col("user_id").between(10, 19)
-            & (F.col("event_type") == "purchase"),
-            prune_col="user_id",
-            prune_lo=10,
-            prune_hi=19,
-        )
-        expired = t.expire_snapshots(keep_last=2)
-        reclaimed = t.vacuum(grace_seconds=0)
-        sys.stderr.write(
-            f"txn_delete: expired versions {expired}, "
-            f"reclaimed {reclaimed} files\n"
-        )
-        return t
-
-    return _txn_table(spark, sf_dir, "txn_delete", build)
-
-
-def q_txn_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_txn_delete(spark: SparkSession, txn_delete: TxnTable) -> DataFrame:
     # round 12 (VERDICT r11 next-round #2/#3): row DELETE + snapshot
     # retention through the transactional boundary — the committed
     # end state after raw create → dedup merge → OPTIMIZE → selective
@@ -2062,47 +2059,20 @@ def q_txn_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     # erase condition commutes with per-key latest-wins because it
     # only references key columns. Selectivity/NULL-semantics/expiry
     # fine-grain properties are pytest-gated (test_round12_ops.py).
-    t = _txn_delete_table(spark, sf_dir)
-    return t.read(spark).select(
-        "user_id", "event_type", "ts", "event_id", "value"
-    )
+    return txn_delete.read(spark).select(*_TXN_COLS)
 
 
-def q_txn_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # round 12: additive SCHEMA EVOLUTION made driver-visible — v1 =
-    # create from pre-cutoff events, v2 = evolve-schema committing a
-    # widened schema (new nullable `tag` string) with ZERO data
-    # rewritten (same files, stats carried), v3 = append of the
-    # post-cutoff events WITH the new column populated. The read
-    # null-fills `tag` for pre-evolution files (the manifest schema
-    # drives the scan, parquet name resolution does the fill), so
-    # the oracle is a plain UNION: old slice with NULL tag, new
-    # slice with the computed tag. Time-travel/guard/merge-after-
-    # evolve properties are pytest-gated (test_round12_ops.py).
-    from stock_market_data_pipeline_v2_spark.sources.txn_table import (
-        TxnTable,
-    )
-
-    def build(root):
-        events, c1, _c2 = _txn_events(spark, sf_dir)
-        t = TxnTable.create(
-            spark, root, events.filter(F.col("ts") < c1),
-            zone_map_col="user_id",
-        )
-        t.evolve_schema(spark, [("tag", "string")])
-        t.append(
-            spark,
-            events.filter(F.col("ts") >= c1).withColumn(
-                "tag", F.upper(F.col("event_type"))
-            ),
-            zone_map_col="user_id",
-        )
-        return t
-
-    t = _txn_table(spark, sf_dir, "txn_evolve", build)
-    return t.read(spark).select(
-        "user_id", "event_type", "ts", "event_id", "value", "tag"
-    )
+def q_txn_schema_evolution(
+    spark: SparkSession, txn_evolve: TxnTable
+) -> DataFrame:
+    # round 12: additive SCHEMA EVOLUTION made driver-visible
+    # (d_txn_evolve). The read null-fills `tag` for pre-evolution files
+    # (the manifest schema drives the scan, parquet name resolution
+    # does the fill), so the oracle is a plain UNION: old slice with
+    # NULL tag, new slice with the computed tag. Time-travel/guard/
+    # merge-after-evolve properties are pytest-gated
+    # (test_round12_ops.py).
+    return txn_evolve.read(spark).select(*_TXN_COLS, "tag")
 
 
 def q_pipeline_lineage(spark: SparkSession) -> DataFrame:

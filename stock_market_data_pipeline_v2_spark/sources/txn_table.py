@@ -1,140 +1,77 @@
-"""Transactional parquet table — snapshot isolation + optimistic
-concurrency for the warehouse MERGE boundary (round 10, VERDICT r9
-"What's missing" #2).
+"""Transactional parquet table: snapshot isolation and optimistic
+concurrency for the warehouse MERGE boundary.
 
 The reference's upsert is warehouse-ACID (Snowflake MERGE,
 ``load_to_snowflake.py:40-54``); `operators/upsert.py:merge_upsert`
-ports the SEMANTICS but its plain-parquet overwrite has no isolation
-or concurrent-writer safety. This module supplies that boundary the
-lakehouse way — a minimal, dependency-free implementation of the
-versioned-manifest commit protocol every table format (Delta,
-Iceberg, Hudi) is built on, sized to what this engine actually
-needs:
+ports its semantics, and this module ports the boundary: a minimal,
+dependency-free versioned-manifest commit protocol, the one every
+table format (Delta, Iceberg, Hudi) is built on.
 
-- **Immutable data files.** Writers only ADD parquet files under
-  ``data/``; nothing is modified or deleted by a commit (vacuum is a
-  separate, explicitly-invoked maintenance op).
-- **Versioned manifests.** ``_versions/v{N:08d}.json`` lists the
-  exact data files of snapshot N plus the parent version and the
-  committed operation. Readers resolve the LATEST manifest once and
-  read only its files — a reader never observes a half-written
-  table, and a pinned version is reproducible forever (time travel).
-- **Atomic commit = one ``os.link``.** The manifest is fully written
-  to a temp name first, then hard-linked to its final version path.
-  ``link(2)`` fails with EEXIST if the version was claimed — that
-  single failable primitive is the whole concurrency story. On an
-  object store the same slot is a conditional PUT
-  (`If-None-Match: *`) or a rename-without-overwrite; the protocol
-  is unchanged (documented swap point, like the Kafka broker).
-- **Optimistic MERGE.** ``merge`` reads the latest snapshot, applies
-  `merge_upsert`'s latest-wins semantics (the oracle-gated
-  operator — same keys/version/tiebreak contract), stages the new
-  copy-on-write file set, and tries to commit parent+1. A lost race
-  raises EEXIST → re-read the NEW snapshot and re-apply; the retry
-  loop makes concurrent merges SERIALIZABLE (each commit's parent is
-  the version it actually read).
-- **Append** commits parent.files + staged files — no rewrite; the
-  same retry loop re-derives the parent file list, so an append
-  racing a merge cannot resurrect replaced files.
+Storage:
 
-Round 11 hardening (VERDICT r10 "What's wrong" #1/#2 + next-round
-#3/#4/#5):
+- **Immutable data files.** Writers only add parquet files under
+  ``data/<uuid>/``; a commit never modifies or deletes one. Staged
+  files no manifest references are invisible to readers; ``vacuum``
+  reclaims them past a retention grace.
+- **Versioned manifests.** ``_versions/v{N:08d}.json`` is snapshot N:
+  ``version``, ``parent``, ``op``, ``committed_at``, its ``files`` and
+  ``n_files``, ``schema`` (every version has exactly one), per-file
+  zone-map ``stats`` ({col: [min, max]}), ``key_unique_on`` (the key
+  set the snapshot is proven one-row-per-key on, or None), ``txn``
+  (app_id -> highest committed stream batch, Delta's SetTransaction)
+  and ``constraints`` (name -> SQL CHECK expression). A manifest is
+  self-contained, so a pinned version reads the same forever and
+  dropping ancestors (``expire_snapshots``) never breaks a survivor.
+- **``_latest_hint``**, rewritten after each commit, is only a lower
+  bound: ``latest_version`` probes forward from it and falls back to
+  the directory listing when it is missing, corrupt or dangling.
 
-- **Key-uniqueness is TRACKED, not assumed.** Each manifest records
-  ``key_unique_on`` — the key set the snapshot is one-row-per-key on
-  (set by ``merge``/verified ``create``; cleared by ``append``;
-  carried by ``optimize``). The zone-mapped selective merge only
-  engages when the PARENT manifest proves uniqueness on the merge
-  keys; otherwise it silently falls back to the full copy-on-write
-  rewrite. This closes the r10 latent bug where a selective merge
-  over a raw (duplicate-key) create could carry stale rows forward
-  in skipped files.
-- **``optimize``** re-clusters the snapshot by the zone-map column
-  into range-disjoint files as a new committed version — what makes
-  selective merges actually SKIP (unsorted files intersect every
-  key range). Same retry loop, carries ``key_unique_on`` forward.
-- **``vacuum`` has a retention grace** (Delta's VACUUM retention):
-  staged-but-uncommitted files younger than ``grace_seconds`` are
-  left alone so a concurrent writer between ``_stage`` and
-  ``_try_commit`` cannot have its files reclaimed from under it.
-- **Streaming sink**: :func:`commit_stream_batch` is the idempotent
-  ``foreachBatch`` target — manifests carry a per-app ``txn``
-  watermark map (Delta's SetTransaction), so a replayed micro-batch
-  (same app_id + batch_id) is a no-op and the sink is exactly-once
-  across checkpoint restarts.
+The commit contract (``_commit``):
 
-Round 12 (VERDICT r11 "What's wrong" #1/#2, next-round #2/#3, and
-the four ADVICE findings):
+1. Resolve the latest version ``parent`` and its manifest.
+2. The verb's attempt derives the fields it changes from that
+   manifest — re-checking its guards (schema match, CHECK
+   constraints) against it — or returns None for a no-op (a replayed
+   stream batch).
+3. Every field of ``_CARRIED`` the verb does not override is
+   inherited from the parent unchanged: ``files``, ``schema``,
+   ``stats``, ``key_unique_on``, ``txn``, ``constraints``. A verb
+   never re-lists a field it leaves alone, so no commit can drop the
+   exactly-once watermarks or the constraints by omission.
+4. ``_try_commit`` writes the manifest to a temp name, fsyncs it and
+   hard-links it to ``v{parent+1}``. ``link(2)`` fails with EEXIST if
+   another writer claimed the version: that one failable primitive is
+   the whole concurrency story (an object store's conditional PUT is
+   the same slot).
+5. A lost race (``CommitConflict``) re-runs the attempt on the
+   winner's manifest, so every commit's parent is the version it read
+   and concurrent writers serialize; after ``COMMIT_ATTEMPTS`` lost
+   races the verb raises ``CommitConflict`` naming its op.
 
-- **Zone maps survive every write path.** merge/append/stream/
-  optimize stage with the UNION of the parent manifest's stat
-  columns (``_carried_stat_cols``), so ``optimize_zorder``'s
-  multi-dimensional pruning no longer silently decays to
-  conservative on the freshest files after the first post-ZORDER
-  write.
-- **Row DELETE** (``delete``): committed copy-on-write erasure with
-  SQL NULL semantics and the same zone-map hit-test as merge —
-  selective without needing key-uniqueness (a delete never shadows
-  rows in other files).
-- **Snapshot retention** (``expire_snapshots``): drop all but the
-  newest N manifests; vacuum then reclaims files referenced only by
-  expired history — the only way table storage ever shrinks.
-- **Schema evolution** (``evolve_schema``): additive column adds as
-  a committed version with zero data rewritten — reads apply the
-  manifest schema, so pre-evolution files null-fill.
-- **Timestamp time travel** (``version_as_of``) off per-manifest
-  ``committed_at`` stamps, and **zero-copy clone** (``clone``) via
-  hard-linked immutable data files.
-- Schema guards re-validate against the ACTUAL parent inside every
-  retry (TOCTOU), footer stats are coerced JSON-safe (non-native
-  types degrade to conservative, never crash the commit), and a
-  dangling latest-hint falls back to the directory listing.
+What each verb overrides:
 
-Round 12, second half — the remaining DML/maintenance verbs:
+- ``append`` / ``commit_stream_batch``: files (parent's + staged once),
+  schema (``df.schema``), stats (parent's + staged), ``key_unique_on``
+  cleared; a stream batch also advances its app's watermark.
+- ``merge``: copy-on-write rewrite of the files its keys hit
+  (selective only when the parent is proven key-unique on the merge
+  keys), schema, stats, ``key_unique_on = keys``.
+- ``delete`` / ``update``: copy-on-write rewrite of the zone-map-hit
+  files; ``update`` clears ``key_unique_on`` when it assigns a key.
+- ``optimize`` / ``optimize_zorder`` (both op ``optimize``): files,
+  stats and schema of the re-clustered snapshot.
+- ``evolve_schema``: schema. ``add_constraint`` / ``drop_constraint``:
+  constraints. ``restore``: every field from the target version, with
+  the watermarks merged at each app's MAX (data rewinds,
+  exactly-once bookkeeping never does).
 
-- **Row UPDATE** (``update``): committed copy-on-write ``UPDATE …
-  SET … WHERE`` with SQL semantics (RHS against OLD values, NULL
-  condition leaves rows unchanged, store-assignment cast) and the
-  same caller-contracted zone-map selectivity as ``delete``.
-- **CHECK constraints** (``add_constraint``/``drop_constraint`` —
-  Delta's table invariants): SQL boolean expressions no committed
-  row may falsify (NULL passes). ``add`` validates the current
-  snapshot; every row-introducing write path (append, merge,
-  update, stream batch) enforces the parent's set on the rows it
-  introduces — re-checked per retry iff the set changed (the
-  schema-guard TOCTOU discipline, without paying a probe job per
-  retry in the race-free case).
-- **RESTORE** (``restore``): Delta's ``RESTORE TABLE … TO VERSION
-  AS OF`` as a forward commit of the target's files/schema/stats/
-  uniqueness/constraints — zero data copied, bad versions stay
-  time-travelable, and the per-app stream watermarks merge at MAX
-  (data rewinds; exactly-once bookkeeping never does).
-- **Change data feed** (``changes``): keyed snapshot diff emitting
-  Delta-CDF-shaped ``_change_type`` rows (insert / delete / both
-  update images) from ONE null-safe full-outer equi-join — gated on
-  both snapshots being manifest-proven key-unique, the selective
-  merge's discipline.
-- **MERGE … WHEN NOT MATCHED BY SOURCE THEN DELETE**
-  (``merge(when_not_matched_by_source="delete")``): full-sync
-  semantics; always a full rewrite, because a file no source key
-  intersects is one whose rows must all be deleted — the exact
-  inverse of the selective carry-forward argument.
-
-100 TB notes: manifests are O(files) JSON — the real formats shard
-them (Iceberg manifest lists); the zone-mapped merge makes rewrite
-cost O(files-that-intersect) after an ``optimize``, the
-partition-scoped shape production MERGE needs. Tests
-(tests/test_round10_ops.py, test_round11_ops.py,
-test_round12_ops.py, test_round12_dml.py) pin snapshot isolation
-under a concurrent commit, two-writer conflict/retry
-serializability, time travel, vacuum's referenced-file + grace
-safety, the duplicate-key-base fallback, genuine file skipping
-after optimize, the idempotent streaming sink, multi-dimension
-zone-map survival across writes, selective delete/update,
-retention expiry, constraint enforcement on every introducing
-path (incl. the add-constraint race), restore's watermark
-preservation, the change feed's image contract, and sync-merge's
-forced full rewrite.
+Rewriting verbs re-stage on every attempt; stream batches and appends
+stage once. Lost races therefore leave staged orphans, which cost
+storage only (``staged_orphans``, ``vacuum``). Tests
+(tests/test_round10_ops.py, test_round11_ops.py, test_round12_ops.py,
+test_round12_dml.py, test_txn_commit.py) pin snapshot isolation, the
+serializable retry of every verb, the interrupted commit, time travel,
+vacuum's grace, the zone-map rules and the exactly-once sink.
 """
 
 from __future__ import annotations
@@ -143,12 +80,23 @@ import json
 import os
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+# Lost races a commit absorbs before it gives up.
+COMMIT_ATTEMPTS = 10
+
+# The manifest fields a commit inherits from its parent unless its
+# verb overrides them.
+_CARRIED = ("files", "schema", "stats", "key_unique_on", "txn", "constraints")
+
+
+def _schema(schema_json: str) -> StructType:
+    return StructType.fromJson(json.loads(schema_json))
 
 
 class CommitConflict(Exception):
@@ -191,12 +139,10 @@ class TxnTable:
         os.makedirs(t._data_dir, exist_ok=True)
         unique_on: list[str] | None = None
         if keys:
-            from pyspark.sql import functions as _F
-
             dup = (
                 df.groupBy(*keys)
-                .agg(_F.count(_F.lit(1)).alias("__n"))
-                .filter(_F.col("__n") > 1)
+                .agg(F.count(F.lit(1)).alias("__n"))
+                .filter(F.col("__n") > 1)
                 .limit(1)
                 .count()
             )
@@ -320,8 +266,8 @@ class TxnTable:
         mean the clone shares bytes but can never observe the
         source's future writes, and either table vacuuming only
         unlinks ITS directory entry — the inode lives while any
-        clone references it. The scale probe's per-mode timed merges
-        run on exactly these clones. Same-filesystem only (link(2));
+        clone references it, so a clone is a free scratch copy to
+        time or try a write on. Same-filesystem only (link(2));
         an object-store port would copy manifests and reference the
         same object keys."""
         import shutil
@@ -360,6 +306,11 @@ class TxnTable:
         once, where a 1-D sort only ever prunes on its cluster
         column. Pure manifest arithmetic, like ``prune_files``."""
         m = self.manifest(version)
+        return self._kept(m, preds), len(m["files"])
+
+    @staticmethod
+    def _kept(m: dict, preds: Sequence[tuple]) -> list[str]:
+        """The files of manifest ``m`` that ``prune_box`` keeps."""
         stats = m.get("stats", {})
 
         def _keep(f: str) -> bool:
@@ -370,8 +321,7 @@ class TxnTable:
                     return False
             return True
 
-        kept = [f for f in m["files"] if _keep(f)]
-        return kept, len(m["files"])
+        return [f for f in m["files"] if _keep(f)]
 
     def read_pruned(
         self,
@@ -517,7 +467,7 @@ class TxnTable:
         parent: int,
         files: list[str],
         op: str,
-        schema: StructType,
+        schema: StructType | str,
         stats: dict | None = None,
         key_unique_on: list[str] | None = None,
         txn: dict | None = None,
@@ -537,7 +487,8 @@ class TxnTable:
                 "committed_at": time.time(),
                 "files": files,
                 "n_files": len(files),
-                "schema": schema.json(),
+                # a schema carried from the parent is already JSON
+                "schema": schema if isinstance(schema, str) else schema.json(),
                 "stats": stats or {},
                 # key set this snapshot is one-row-per-key on (None =
                 # unknown/duplicated) — gates the selective merge.
@@ -613,7 +564,7 @@ class TxnTable:
         tighten it). Schema EVOLUTION would be a separate committed
         operation (Delta's mergeSchema); this table format keeps the
         invariant that every version has one schema."""
-        want = StructType.fromJson(json.loads(manifest_schema_json))
+        want = _schema(manifest_schema_json)
         norm = lambda s: sorted(  # noqa: E731
             (f.name, f.dataType.simpleString()) for f in s.fields
         )
@@ -625,54 +576,138 @@ class TxnTable:
                 "full-COW merge of a re-projected snapshot"
             )
 
+    # -- the commit loop --------------------------------------------------
+    def _commit(
+        self, op: str, attempt: Callable[[dict], dict | None]
+    ) -> int | None:
+        """Commit ``op`` optimistically: resolve the latest manifest,
+        let ``attempt(manifest)`` return the fields this commit changes
+        (or None for a no-op, which returns None), carry every other
+        field of ``_CARRIED`` from that parent, and link the next
+        version. A lost race re-runs ``attempt`` on the winner's
+        manifest, so each commit's parent is the version it read; after
+        ``COMMIT_ATTEMPTS`` lost races the op gives up."""
+        for _ in range(COMMIT_ATTEMPTS):
+            parent = self.latest_version()
+            m = self.manifest(parent)
+            change = attempt(m)
+            if change is None:
+                return None
+            fields = {k: m.get(k) for k in _CARRIED}
+            fields.update(change)
+            try:
+                return self._try_commit(parent, op=op, **fields)
+            except CommitConflict:
+                continue
+        raise CommitConflict(f"{op} gave up after {COMMIT_ATTEMPTS} attempts")
+
+    def _constraint_check(self, df: DataFrame, op: str) -> Callable[[dict], None]:
+        """Enforce each parent's CHECK constraints on the rows of
+        ``df``, re-running the probe job only when a lost race moved
+        the commit onto a parent with a different constraint set."""
+        checked: dict | None = None
+
+        def check(m: dict) -> None:
+            nonlocal checked
+            cons = m.get("constraints", {})
+            if cons != checked:
+                self._enforce_constraints(df, cons, op)
+                checked = cons
+
+        return check
+
+    def _appended(
+        self, df: DataFrame, op: str, zone_map_col: str | None
+    ) -> Callable[[dict], dict]:
+        """The attempt of an append of ``df``: schema and constraints
+        are checked against each parent (TOCTOU), the files are staged
+        once and added to the parent's. Appends may introduce duplicate
+        keys across files, so the uniqueness claim is dropped until the
+        next merge re-establishes it."""
+        check = self._constraint_check(df, op)
+        staged: tuple[list[str], dict] | None = None
+
+        def attempt(m: dict) -> dict:
+            nonlocal staged
+            self._require_schema_match(df.schema, m["schema"], op)
+            check(m)
+            if staged is None:
+                staged = self._stage(
+                    df, stats_col=self._carried_stat_cols(m, zone_map_col)
+                )
+            files, st = staged
+            return {
+                "files": m["files"] + files,
+                "schema": df.schema,
+                "stats": {**m.get("stats", {}), **st},
+                "key_unique_on": None,
+            }
+
+        return attempt
+
+    def _rewrite(
+        self,
+        m: dict,
+        touched: list[str],
+        df: DataFrame,
+        stat_cols: str | Sequence[str] | None = None,
+    ) -> dict:
+        """The file list and stats of ``m`` with its ``touched`` files
+        replaced by ``df``, staged with the parent's stat columns plus
+        ``stat_cols``: every untouched file is carried by reference
+        with its zone map."""
+        stats = m.get("stats", {})
+        hit = set(touched)
+        untouched = [f for f in m["files"] if f not in hit]
+        staged, st = self._stage(
+            df, stats_col=self._carried_stat_cols(m, stat_cols)
+        )
+        return {
+            "files": untouched + staged,
+            "stats": {**{f: stats[f] for f in untouched if stats.get(f)}, **st},
+        }
+
+    def _rewrite_where(
+        self, spark: SparkSession, m: dict, prune: tuple, rows
+    ) -> dict:
+        """The copy-on-write step ``delete`` and ``update`` share: with
+        ``prune = (col, lo, hi)`` only the files whose zone map
+        intersects the range are read (all files when ``col`` is None),
+        ``rows(df)`` gives their new rows, and the rest are carried."""
+        touched = m["files"] if prune[0] is None else self._kept(m, [prune])
+        return self._rewrite(
+            m, touched, rows(self._read_files(spark, touched, m["schema"]))
+        )
+
+    def _recluster(
+        self, spark: SparkSession, layout, stat_cols: str | Sequence[str]
+    ) -> int:
+        """Rewrite the whole snapshot as ``layout(snapshot)``, committed
+        as ``optimize``: rows, uniqueness and watermarks unchanged. The
+        parent's other stat columns are recorded too (a re-cluster
+        widens their envelopes, but keeps them mapped for later
+        writes)."""
+
+        def attempt(m: dict) -> dict:
+            snapshot = self._read_files(spark, m["files"], m["schema"])
+            return {
+                **self._rewrite(m, m["files"], layout(snapshot), stat_cols),
+                "schema": snapshot.schema,
+            }
+
+        return self._commit("optimize", attempt)
+
     # -- operations --------------------------------------------------------
     def append(
         self,
         spark: SparkSession,
         df: DataFrame,
-        max_retries: int = 10,
         zone_map_col: str | None = None,
     ) -> int:
-        staged: list[str] | None = None
-        st: dict = {}
-        checked_cons: dict | None = None
-        for _ in range(max_retries):
-            parent = self.latest_version()
-            m = self.manifest(parent)
-            # Schema is validated against the manifest of the parent
-            # ACTUALLY being committed against — re-checked on every
-            # retry, so losing a race to a schema-changing commit
-            # cannot be followed by a mismatched append (ADVICE r11
-            # #2, the check-then-commit TOCTOU).
-            self._require_schema_match(df.schema, m["schema"], "append")
-            # same TOCTOU discipline for CHECK constraints, but the
-            # probe is a Spark job — re-run only when the parent's
-            # constraint set differs from the one already validated.
-            cons = m.get("constraints", {})
-            if cons != checked_cons:
-                self._enforce_constraints(df, cons, "append")
-                checked_cons = cons
-            if staged is None:
-                staged, st = self._stage(
-                    df, stats_col=self._carried_stat_cols(m, zone_map_col)
-                )
-            try:
-                # appends may introduce duplicate keys across files:
-                # the snapshot's key_unique_on claim is dropped until
-                # the next merge re-establishes it.
-                return self._try_commit(
-                    parent,
-                    m["files"] + staged,
-                    "append",
-                    df.schema,
-                    stats={**m.get("stats", {}), **st},
-                    key_unique_on=None,
-                    txn=m.get("txn", {}),
-                    constraints=cons,
-                )
-            except CommitConflict:
-                continue  # re-derive the parent file list and retry
-        raise CommitConflict(f"append gave up after {max_retries} retries")
+        """Commit the parent's files plus ``df``'s — no rewrite, so an
+        append racing a merge re-derives the parent file list and can
+        never resurrect replaced files."""
+        return self._commit("append", self._appended(df, "append", zone_map_col))
 
     def merge(
         self,
@@ -681,7 +716,6 @@ class TxnTable:
         keys: Sequence[str],
         version_col: str,
         tiebreak_cols: Sequence[str] = (),
-        max_retries: int = 10,
         zone_map_col: str | None = None,
         when_not_matched_by_source: str | None = None,
     ) -> int:
@@ -733,19 +767,13 @@ class TxnTable:
                 "when_not_matched_by_source: only 'delete' is supported"
             )
         sync = when_not_matched_by_source == "delete"
+        # the rows a merge INTRODUCES are the update rows; surviving
+        # target rows were validated by their own commits
+        check = self._constraint_check(updates, "merge")
 
-        checked_cons: dict | None = None
-        for _ in range(max_retries):
-            parent = self.latest_version()
-            m = self.manifest(parent)
+        def attempt(m: dict) -> dict:
+            check(m)
             stats = m.get("stats", {})
-            cons = m.get("constraints", {})
-            if cons != checked_cons:
-                # the rows a merge INTRODUCES are the update rows;
-                # surviving target rows were validated by their own
-                # commits (re-checked per retry iff the set changed)
-                self._enforce_constraints(updates, cons, "merge")
-                checked_cons = cons
             # Selective rewrite is gated on PROOF of key-uniqueness:
             # skipping a file silently preserves its rows, which is
             # only latest-wins-correct if no skipped row is shadowed
@@ -758,7 +786,6 @@ class TxnTable:
             )
             if not selective:
                 touched = list(m["files"])
-                untouched: list[str] = []
             else:
                 ranged = [
                     (f, *stats[f][zone_map_col])
@@ -786,7 +813,6 @@ class TxnTable:
                         .collect()  # hit FILE PATHS only — model-sized
                     )
                     touched += sorted(r["__file"] for r in hit)
-                untouched = [f for f in m["files"] if f not in set(touched)]
             snapshot = self._read_files(spark, touched, m["schema"])
             merged = merge_upsert(
                 snapshot,
@@ -804,29 +830,17 @@ class TxnTable:
                     updates.select(*keys).distinct(), on=list(keys),
                     how="left_semi",
                 )
-            staged, st = self._stage(
-                merged, stats_col=self._carried_stat_cols(m, zone_map_col)
-            )
-            files = untouched + staged
-            new_stats = {
-                **{f: stats[f] for f in untouched if stats.get(f)},
-                **st,
+            # a merge emits one row per key for everything it
+            # rewrote; with untouched files provably key-unique
+            # (selective gate above), the committed snapshot is
+            # key-unique on `keys` by construction.
+            return {
+                **self._rewrite(m, touched, merged, zone_map_col),
+                "schema": merged.schema,
+                "key_unique_on": list(keys),
             }
-            try:
-                # a merge emits one row per key for everything it
-                # rewrote; with untouched files provably key-unique
-                # (selective gate above), the committed snapshot is
-                # key-unique on `keys` by construction.
-                return self._try_commit(
-                    parent, files, "merge", merged.schema,
-                    stats=new_stats,
-                    key_unique_on=list(keys),
-                    txn=m.get("txn", {}),
-                    constraints=cons,
-                )
-            except CommitConflict:
-                continue  # somebody committed first: re-merge onto THEIR result
-        raise CommitConflict(f"merge gave up after {max_retries} retries")
+
+        return self._commit("merge", attempt)
 
     def delete(
         self,
@@ -835,7 +849,6 @@ class TxnTable:
         prune_col: str | None = None,
         prune_lo=None,
         prune_hi=None,
-        max_retries: int = 10,
     ) -> int:
         """Committed copy-on-write row DELETE (round 12, VERDICT r11
         next-round #2 — the GDPR-erasure shape; Snowflake MERGE's
@@ -863,45 +876,18 @@ class TxnTable:
         skipping a file a delete cannot touch is always correct,
         because a delete never shadows rows in other files — it only
         removes. ``key_unique_on`` is PRESERVED (removing rows cannot
-        introduce duplicates), as is the ``txn`` watermark map."""
+        introduce duplicates), as are the ``txn`` watermark map and
+        the constraints (removing rows cannot violate one)."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         # keep rows where cond is FALSE or NULL (SQL DELETE semantics)
         keep = ~cond.eqNullSafe(F.lit(True))
-        for _ in range(max_retries):
-            parent = self.latest_version()
-            m = self.manifest(parent)
-            stats = m.get("stats", {})
-            if prune_col is not None:
-                touched, _total = self.prune_files(
-                    prune_col, prune_lo, prune_hi, parent
-                )
-            else:
-                touched = list(m["files"])
-            untouched = [f for f in m["files"] if f not in set(touched)]
-            remain = self._read_files(spark, touched, m["schema"]).filter(keep)
-            staged, st = self._stage(
-                remain, stats_col=self._carried_stat_cols(m)
-            )
-            files = untouched + staged
-            new_stats = {
-                **{f: stats[f] for f in untouched if stats.get(f)},
-                **st,
-            }
-            try:
-                return self._try_commit(
-                    parent,
-                    files,
-                    "delete",
-                    StructType.fromJson(json.loads(m["schema"])),
-                    stats=new_stats,
-                    key_unique_on=m.get("key_unique_on"),
-                    txn=m.get("txn", {}),
-                    # removing rows cannot violate a CHECK constraint
-                    constraints=m.get("constraints", {}),
-                )
-            except CommitConflict:
-                continue  # re-apply onto the winner's snapshot
-        raise CommitConflict(f"delete gave up after {max_retries} retries")
+        prune = (prune_col, prune_lo, prune_hi)
+        return self._commit(
+            "delete",
+            lambda m: self._rewrite_where(
+                spark, m, prune, lambda df: df.filter(keep)
+            ),
+        )
 
     def update(
         self,
@@ -911,7 +897,6 @@ class TxnTable:
         prune_col: str | None = None,
         prune_lo=None,
         prune_hi=None,
-        max_retries: int = 10,
     ) -> int:
         """Committed copy-on-write row UPDATE (round 12 — the third
         DML verb; Delta/Snowflake ``UPDATE t SET ... WHERE cond``).
@@ -940,74 +925,49 @@ class TxnTable:
         rewritten rows (the only rows whose values change)."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         hit = cond.eqNullSafe(F.lit(True))
-        for _ in range(max_retries):
-            parent = self.latest_version()
-            m = self.manifest(parent)
-            stats = m.get("stats", {})
-            schema = StructType.fromJson(json.loads(m["schema"]))
-            by_name = {f.name: f for f in schema.fields}
-            unknown = [c for c in set_exprs if c not in by_name]
+        prune = (prune_col, prune_lo, prune_hi)
+
+        def attempt(m: dict) -> dict:
+            fields = _schema(m["schema"]).fields
+            unknown = [c for c in set_exprs if c not in {f.name for f in fields}]
             if unknown:
                 raise ValueError(
                     f"update: SET targets not in the table schema: {unknown}"
                 )
-            if prune_col is not None:
-                touched, _total = self.prune_files(
-                    prune_col, prune_lo, prune_hi, parent
+
+            def rows(df: DataFrame) -> DataFrame:
+                projected = []
+                for f in fields:
+                    if f.name in set_exprs:
+                        e = set_exprs[f.name]
+                        e = F.expr(e) if isinstance(e, str) else e
+                        projected.append(
+                            F.when(hit, e.cast(f.dataType))
+                            .otherwise(F.col(f.name))
+                            .alias(f.name)
+                        )
+                    else:
+                        projected.append(F.col(f.name))
+                rewritten = df.select(*projected)
+                # rewritten rows are the ones whose values change — the
+                # rows this commit introduces
+                self._enforce_constraints(
+                    rewritten, m.get("constraints", {}), "update"
                 )
-            else:
-                touched = list(m["files"])
-            untouched = [f for f in m["files"] if f not in set(touched)]
-            df = self._read_files(spark, touched, m["schema"])
-            projected = []
-            for f in schema.fields:
-                if f.name in set_exprs:
-                    e = set_exprs[f.name]
-                    e = F.expr(e) if isinstance(e, str) else e
-                    projected.append(
-                        F.when(hit, e.cast(f.dataType))
-                        .otherwise(F.col(f.name))
-                        .alias(f.name)
-                    )
-                else:
-                    projected.append(F.col(f.name))
-            rewritten = df.select(*projected)
-            cons = m.get("constraints", {})
-            # rewritten rows are the ones whose values change — the
-            # rows this commit introduces (untouched files carry
-            # already-validated rows)
-            self._enforce_constraints(rewritten, cons, "update")
-            staged, st = self._stage(
-                rewritten, stats_col=self._carried_stat_cols(m)
-            )
-            files = untouched + staged
-            new_stats = {
-                **{f: stats[f] for f in untouched if stats.get(f)},
-                **st,
-            }
+                return rewritten
+
+            change = self._rewrite_where(spark, m, prune, rows)
             unique = m.get("key_unique_on")
             if unique and set(unique) & set(set_exprs):
-                unique = None  # assigning a key column may mint dupes
-            try:
-                return self._try_commit(
-                    parent,
-                    files,
-                    "update",
-                    schema,
-                    stats=new_stats,
-                    key_unique_on=unique,
-                    txn=m.get("txn", {}),
-                    constraints=cons,
-                )
-            except CommitConflict:
-                continue  # re-apply onto the winner's snapshot
-        raise CommitConflict(f"update gave up after {max_retries} retries")
+                change["key_unique_on"] = None  # a key column may mint dupes
+            return change
+
+        return self._commit("update", attempt)
 
     def evolve_schema(
         self,
         spark: SparkSession,
         add_fields: Sequence[tuple],
-        max_retries: int = 10,
     ) -> int:
         """Widen the table schema by ADDING nullable columns —
         committed as op ``evolve-schema``, zero data rewritten
@@ -1031,10 +991,8 @@ class TxnTable:
         forward — the data files are byte-identical."""
         from pyspark.sql.types import DataType
 
-        for _ in range(max_retries):
-            parent = self.latest_version()
-            m = self.manifest(parent)
-            schema = StructType.fromJson(json.loads(m["schema"]))
+        def attempt(m: dict) -> dict:
+            schema = _schema(m["schema"])
             have = {f.name for f in schema.fields}
             new = StructType(list(schema.fields))
             for name, typ in add_fields:
@@ -1045,43 +1003,28 @@ class TxnTable:
                 # DataType.fromDDL (public, needs the active session —
                 # evolve is always called with one)
                 new = new.add(name, DataType.fromDDL(typ), True)
-            try:
-                return self._try_commit(
-                    parent,
-                    m["files"],
-                    "evolve-schema",
-                    new,
-                    stats=m.get("stats", {}),
-                    key_unique_on=m.get("key_unique_on"),
-                    txn=m.get("txn", {}),
-                    constraints=m.get("constraints", {}),
-                )
-            except CommitConflict:
-                continue  # re-derive against the winner's schema
-        raise CommitConflict(
-            f"evolve_schema gave up after {max_retries} retries"
-        )
+            return {"schema": new}
+
+        return self._commit("evolve-schema", attempt)
 
     def add_constraint(
         self,
         spark: SparkSession,
         name: str,
         expr: str,
-        max_retries: int = 10,
     ) -> int:
         """Add a CHECK constraint (Delta's ``ALTER TABLE … ADD
         CONSTRAINT``): ``expr`` is a SQL boolean expression no
         committed row may falsify — NULL passes, SQL CHECK
         semantics. The CURRENT snapshot is validated first (one probe
-        job, re-run per retry against the actual parent — the data
+        job, re-run per attempt against the actual parent — the data
         may have changed under a lost race), then the constraint is
         committed as metadata, zero data rewritten. Every subsequent
         ``append``/``merge``/``update``/stream batch enforces it on
         the rows it introduces and refuses the commit on violation."""
-        for _ in range(max_retries):
-            parent = self.latest_version()
-            m = self.manifest(parent)
-            cons = dict(m.get("constraints", {}))
+
+        def attempt(m: dict) -> dict:
+            cons = m.get("constraints", {})
             if name in cons:
                 raise ValueError(
                     f"add_constraint: {name!r} already exists "
@@ -1091,62 +1034,33 @@ class TxnTable:
             self._enforce_constraints(
                 snapshot, {name: expr}, "add_constraint"
             )
-            cons[name] = expr
-            try:
-                return self._try_commit(
-                    parent,
-                    m["files"],
-                    "add-constraint",
-                    StructType.fromJson(json.loads(m["schema"])),
-                    stats=m.get("stats", {}),
-                    key_unique_on=m.get("key_unique_on"),
-                    txn=m.get("txn", {}),
-                    constraints=cons,
-                )
-            except CommitConflict:
-                continue  # re-validate against the winner's snapshot
-        raise CommitConflict(
-            f"add_constraint gave up after {max_retries} retries"
-        )
+            return {"constraints": {**cons, name: expr}}
 
-    def drop_constraint(self, name: str, max_retries: int = 10) -> int:
+        return self._commit("add-constraint", attempt)
+
+    def drop_constraint(self, name: str) -> int:
         """Drop a CHECK constraint — metadata-only commit, zero data
         rewritten. Raises if the constraint does not exist (typo
         safety, Delta's behavior without IF EXISTS)."""
-        for _ in range(max_retries):
-            parent = self.latest_version()
-            m = self.manifest(parent)
-            cons = dict(m.get("constraints", {}))
+
+        def attempt(m: dict) -> dict:
+            cons = m.get("constraints", {})
             if name not in cons:
                 raise ValueError(f"drop_constraint: no constraint {name!r}")
-            del cons[name]
-            try:
-                return self._try_commit(
-                    parent,
-                    m["files"],
-                    "drop-constraint",
-                    StructType.fromJson(json.loads(m["schema"])),
-                    stats=m.get("stats", {}),
-                    key_unique_on=m.get("key_unique_on"),
-                    txn=m.get("txn", {}),
-                    constraints=cons,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"drop_constraint gave up after {max_retries} retries"
-        )
+            return {"constraints": {k: v for k, v in cons.items() if k != name}}
 
-    def restore(self, version: int, max_retries: int = 10) -> int:
+        return self._commit("drop-constraint", attempt)
+
+    def restore(self, version: int) -> int:
         """RESTORE the table to an earlier snapshot (Delta's
         ``RESTORE TABLE … TO VERSION AS OF``) — committed as a NEW
         version whose file list, schema, stats, uniqueness claim and
         constraints are the target's. History only moves forward:
         the bad versions stay readable (until retention expires
         them), the restore is itself time-travelable, and a
-        concurrent writer races the commit like any other (retry
-        loop). Zero data copied — manifests are self-contained file
-        lists over immutable files.
+        concurrent writer races the commit like any other. Zero data
+        copied — manifests are self-contained file lists over
+        immutable files.
 
         The per-app ``txn`` watermark map is NOT rolled back: it
         merges the target's and the current latest's maps at each
@@ -1170,26 +1084,14 @@ class TxnTable:
                 f"restore: version {version} references missing data "
                 f"files (corrupted table?): {missing[:3]}"
             )
-        for _ in range(max_retries):
-            parent = self.latest_version()
-            m = self.manifest(parent)
+
+        def attempt(m: dict) -> dict:
             txn = dict(target.get("txn", {}))
             for app, bid in m.get("txn", {}).items():
                 txn[app] = max(int(bid), int(txn.get(app, -1)))
-            try:
-                return self._try_commit(
-                    parent,
-                    target["files"],
-                    "restore",
-                    StructType.fromJson(json.loads(target["schema"])),
-                    stats=target.get("stats", {}),
-                    key_unique_on=target.get("key_unique_on"),
-                    txn=txn,
-                    constraints=target.get("constraints", {}),
-                )
-            except CommitConflict:
-                continue  # restore still targets the SAME snapshot
-        raise CommitConflict(f"restore gave up after {max_retries} retries")
+            return {**{k: target.get(k) for k in _CARRIED}, "txn": txn}
+
+        return self._commit("restore", attempt)
 
     def changes(
         self,
@@ -1234,8 +1136,8 @@ class TxnTable:
                     f"{m.get('key_unique_on')}); merge on these keys "
                     "first"
                 )
-        sf = StructType.fromJson(json.loads(mf["schema"]))
-        st = StructType.fromJson(json.loads(mt["schema"]))
+        sf = _schema(mf["schema"])
+        st = _schema(mt["schema"])
         common = {f.name for f in sf.fields} & {f.name for f in st.fields}
         if compare_cols is None:
             cmp_cols = [
@@ -1292,7 +1194,6 @@ class TxnTable:
         spark: SparkSession,
         cluster_col: str,
         n_files: int = 8,
-        max_retries: int = 10,
     ) -> int:
         """Re-cluster the latest snapshot into ``n_files``
         range-disjoint files on ``cluster_col`` (committed as op
@@ -1306,31 +1207,12 @@ class TxnTable:
         layout contract with the manifest protocol).
 
         Carries ``key_unique_on`` and ``txn`` forward — re-clustering
-        moves rows between files but adds/removes none. Retries the
-        commit like every other writer."""
-        for _ in range(max_retries):
-            parent = self.latest_version()
-            m = self.manifest(parent)
-            snapshot = self._read_files(spark, m["files"], m["schema"])
-            clustered = snapshot.repartitionByRange(n_files, cluster_col)
-            # carried stat cols: a 1-D re-cluster scrambles the OTHER
-            # previously-mapped dimensions' envelopes (they go wide,
-            # pruning on them turns conservative) but recording them
-            # stays safe and keeps the columns mapped for later writes
-            staged, st = self._stage(
-                clustered, stats_col=self._carried_stat_cols(m, cluster_col)
-            )
-            try:
-                return self._try_commit(
-                    parent, staged, "optimize", snapshot.schema,
-                    stats=st,
-                    key_unique_on=m.get("key_unique_on"),
-                    txn=m.get("txn", {}),
-                    constraints=m.get("constraints", {}),
-                )
-            except CommitConflict:
-                continue  # re-cluster whatever the winner committed
-        raise CommitConflict(f"optimize gave up after {max_retries} retries")
+        moves rows between files but adds/removes none."""
+        return self._recluster(
+            spark,
+            lambda snapshot: snapshot.repartitionByRange(n_files, cluster_col),
+            cluster_col,
+        )
 
     def optimize_zorder(
         self,
@@ -1338,7 +1220,6 @@ class TxnTable:
         specs: Sequence,
         n_files: int = 8,
         bits: int = 16,
-        max_retries: int = 10,
     ) -> int:
         """Multi-dimensional OPTIMIZE (Delta's ``OPTIMIZE ZORDER BY``):
         re-cluster the latest snapshot by the Morton z-value of
@@ -1352,38 +1233,20 @@ class TxnTable:
         ``optimize`` serves only its single cluster column. The
         z-value is a transient sort key (computed, range-partitioned
         and sorted on, then dropped): the committed schema is
-        unchanged. Carries ``key_unique_on``/``txn`` forward like
-        ``optimize``; rows unchanged."""
+        unchanged. Committed as op ``optimize``; carries
+        ``key_unique_on``/``txn`` forward; rows unchanged."""
         from ..functions.zorder import with_zvalue
 
-        stat_cols = [
-            spec[0] for spec in specs
-        ]  # ZSpec exprs must be plain column names to be footer-mappable
-        for _ in range(max_retries):
-            parent = self.latest_version()
-            m = self.manifest(parent)
-            snapshot = self._read_files(spark, m["files"], m["schema"])
-            clustered = (
+        return self._recluster(
+            spark,
+            lambda snapshot: (
                 with_zvalue(snapshot, list(specs), bits=bits)
                 .repartitionByRange(n_files, "zval")
                 .sortWithinPartitions("zval")
                 .drop("zval")
-            )
-            staged, st = self._stage(
-                clustered, stats_col=self._carried_stat_cols(m, stat_cols)
-            )
-            try:
-                return self._try_commit(
-                    parent, staged, "optimize", snapshot.schema,
-                    stats=st,
-                    key_unique_on=m.get("key_unique_on"),
-                    txn=m.get("txn", {}),
-                    constraints=m.get("constraints", {}),
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"optimize_zorder gave up after {max_retries} retries"
+            ),
+            # ZSpec exprs must be plain column names to be footer-mappable
+            [spec[0] for spec in specs],
         )
 
     # -- streaming sink ----------------------------------------------------
@@ -1398,7 +1261,6 @@ class TxnTable:
         df: DataFrame,
         app_id: str,
         batch_id: int,
-        max_retries: int = 10,
         zone_map_col: str | None = None,
     ) -> int | None:
         """Idempotent micro-batch append — the ``foreachBatch``
@@ -1409,54 +1271,25 @@ class TxnTable:
         checkpoint-vs-sink crash window) is detected and skipped, so
         the table is exactly-once even though the source is
         at-least-once. The check-then-commit race is closed by the
-        commit protocol itself: a lost ``os.link`` race re-reads the
-        winner's manifest — including its txn map — before retrying.
-        Returns the committed version, or None if the batch was
-        already committed (the idempotent no-op)."""
-        if batch_id <= self.last_committed_batch(app_id):
-            return None
-        staged: list[str] | None = None
-        st: dict = {}
-        checked_cons: dict | None = None
-        for _ in range(max_retries):
-            parent = self.latest_version()
-            m = self.manifest(parent)
-            if batch_id <= int(m.get("txn", {}).get(app_id, -1)):
-                return None  # replay detected after losing a race
-            # re-checked per retry against the actual parent (TOCTOU,
-            # ADVICE r11 #2); stats staged with the parent's stat-col
-            # union so stream-appended files keep every mapped
-            # dimension prunable (VERDICT r11 "What's wrong" #1)
-            self._require_schema_match(df.schema, m["schema"], "stream-append")
-            cons = m.get("constraints", {})
-            if cons != checked_cons:
-                self._enforce_constraints(df, cons, "stream-append")
-                checked_cons = cons
-            if staged is None:
-                staged, st = self._stage(
-                    df, stats_col=self._carried_stat_cols(m, zone_map_col)
-                )
-            try:
-                return self._try_commit(
-                    parent,
-                    m["files"] + staged,
-                    "stream-append",
-                    df.schema,
-                    stats={**m.get("stats", {}), **st},
-                    key_unique_on=None,
-                    txn={**m.get("txn", {}), app_id: batch_id},
-                    constraints=cons,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"stream batch {batch_id} gave up after {max_retries} retries"
-        )
+        commit protocol itself: every attempt checks the watermark of
+        the manifest it commits against, so a lost ``os.link`` race
+        re-reads the winner's txn map before retrying. Returns the
+        committed version, or None if the batch was already committed
+        (the idempotent no-op)."""
+        append = self._appended(df, "stream-append", zone_map_col)
+
+        def attempt(m: dict) -> dict | None:
+            txn = m.get("txn", {})
+            if batch_id <= int(txn.get(app_id, -1)):
+                return None  # a replay
+            return {**append(m), "txn": {**txn, app_id: batch_id}}
+
+        return self._commit("stream-append", attempt)
 
     def _read_files(
         self, spark: SparkSession, files: list[str], schema_json: str
     ) -> DataFrame:
-        schema = StructType.fromJson(json.loads(schema_json))
+        schema = _schema(schema_json)
         if not files:
             return spark.createDataFrame([], schema)
         # Read with the MANIFEST's schema, not file-sampled inference:

@@ -5,6 +5,7 @@ idempotent streaming sink."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -331,10 +332,15 @@ def test_txn_time_travel_query_matches_prefix_merge(spark):
     snapshot that existed before optimize + the second merge."""
     import __spark_entry__ as entry
     from stock_market_data_pipeline_v2_spark.operators.upsert import merge_upsert
+    from stock_market_data_pipeline_v2_spark.sources.io import load_table, memo
 
     sf = "/root/testdata/sf0.001"
-    got = entry.q_txn_time_travel(spark, sf)
-    events, c1, c2 = entry._txn_events(spark, sf)
+    got = entry.queries()["txn_time_travel"](spark, sf)
+    events = load_table(spark, sf, "events").select(
+        "user_id", "event_type", "ts", "event_id", "value"
+    )
+    c1 = F.lit("2024-01-12").cast("timestamp")
+    c2 = F.lit("2024-01-20").cast("timestamp")
     want = merge_upsert(
         events.filter(F.col("ts") < c1),
         events.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
@@ -344,7 +350,7 @@ def test_txn_time_travel_query_matches_prefix_merge(spark):
     ).select("user_id", "event_type", "ts", "event_id", "value")
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
     # and the demo lineage is what the docstring claims
-    t = entry._txn_demo_table(spark, sf)
+    t = memo(spark, sf, "txn_demo", lambda: pytest.fail("txn_demo not memoized"))
     assert [h["op"] for h in t.history()] == [
         "create", "merge", "optimize", "merge", "optimize"
     ]
@@ -357,7 +363,7 @@ def test_txn_time_travel_query_matches_prefix_merge(spark):
     # read-then-filter on the same snapshot
     kept, total = t.prune_files("user_id", 0, 9)
     assert len(kept) < total
-    pruned = entry.q_txn_pruned_read(spark, sf)
+    pruned = entry.queries()["txn_pruned_read"](spark, sf)
     filtered = t.read(spark).filter(
         (F.col("user_id") >= 0) & (F.col("user_id") <= 9)
     ).select("user_id", "event_type", "ts", "event_id", "value")

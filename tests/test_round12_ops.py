@@ -410,10 +410,13 @@ def test_txn_delete_query_lineage(spark):
     the erased rows, with only the post-retention versions left."""
     import __spark_entry__ as entry
     from stock_market_data_pipeline_v2_spark.operators.upsert import merge_upsert
+    from stock_market_data_pipeline_v2_spark.sources.io import load_table, memo
 
     sf = "/root/testdata/sf0.001"
-    got = entry.q_txn_delete(spark, sf)
-    events, _c1, _c2 = entry._txn_events(spark, sf)
+    got = entry.queries()["txn_delete"](spark, sf)
+    events = load_table(spark, sf, "events").select(
+        "user_id", "event_type", "ts", "event_id", "value"
+    )
     want = (
         merge_upsert(
             events,
@@ -431,7 +434,9 @@ def test_txn_delete_query_lineage(spark):
         .select("user_id", "event_type", "ts", "event_id", "value")
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    t = entry._txn_delete_table(spark, sf)
+    t = memo(
+        spark, sf, "txn_delete", lambda: pytest.fail("txn_delete not memoized")
+    )
     # retention kept exactly the last two versions (optimize, delete)
     assert [h["op"] for h in t.history()] == ["optimize", "delete"]
     assert t.manifest()["key_unique_on"] == ["user_id", "event_type"]
